@@ -3,12 +3,13 @@
 Scale design (the part that matters at 100 TB):
 - Exact dedup is a hash-groupBy — one shuffle on the digest, map-side
   partial aggregation, no driver involvement.
-- MinHash-LSH: signature computation is a narrow pass (array expressions,
-  no shuffle); candidate generation explodes to (band, bucket) keys and
-  self-joins — reducer fan-in is bounded by bucket size, and super-frequent
-  buckets (boilerplate) can be capped with a groupBy count filter before the
-  join. This is the shuffle-friendly banding layout from the MMDS LSH
-  construction.
+- MinHash-LSH: one groupBy(id) builds each doc's shingle-hash array and
+  its signature; candidate generation hashes each band to a bucket and
+  lists bucket members — reducer fan-in is bounded by bucket size, and
+  super-frequent buckets (boilerplate) are dropped by a window count
+  before any member list is built. Candidates are verified by exact
+  Jaccard over the per-doc arrays. This is the shuffle-friendly banding
+  layout from the MMDS LSH construction.
 - SimHash: 64 per-bit votes as one aggregate pass over exploded tokens,
   then pigeonhole-banded candidate pairing (equi-joins on signature
   chunks — exact, no recall loss, never a cross join) verified with
@@ -566,21 +567,20 @@ def lsh_candidates(
     recall on exact-boilerplate groups for a bounded O(bucket²) join.
     """
     brows = band_rows(df, id_col, sig_col, bands, rows_per_band)
-    # bucket alone is the full key (band folded into the hash — band_rows)
-    # Round 15 (VERDICT r14 item 5 — band-level combine before the pair
-    # explode, §2.3): ONE groupBy(bucket) collect_list replaces the
-    # count aggregate + count join + bucket self-join — the member list
-    # is bounded by max_bucket exactly where it is kept (oversized
-    # buckets are dropped whole, same recall trade as before; their
-    # arrays are materialized once in the aggregation buffer and
-    # discarded, bounded by the corpus's worst boilerplate bucket).
-    # Pair semantics unchanged: every unordered (id_a < id_b) pair
-    # within a kept bucket, deduped across bands.
-    buckets_df = brows.groupBy("bucket").agg(
-        F.collect_list("_id").alias("ids")
-    )
-    bounded = buckets_df.filter(
-        (F.size("ids") >= 2) & (F.size("ids") <= max_bucket)
+    # bucket alone is the full key (band folded into the hash — band_rows).
+    # The bucket size is a WINDOW count over the bucket hash partitioning
+    # the member-list aggregate needs anyway, so over-cap buckets are
+    # dropped row by row BEFORE any member list is built (a boilerplate
+    # bucket never becomes an array the size of the corpus; the window
+    # buffer spills) and the plan keeps its single Exchange on bucket.
+    # One groupBy(bucket) collect_list then lists each kept bucket's
+    # members: every unordered (id_a < id_b) pair within a kept bucket,
+    # deduped across bands.
+    bounded = (
+        brows.withColumn("_n", F.count(F.lit(1)).over(W.partitionBy("bucket")))
+        .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket))
+        .groupBy("bucket")
+        .agg(F.collect_list("_id").alias("ids"))
     )
     return (
         bounded.select(F.explode("ids").alias("id_a"), F.col("ids"))
@@ -606,36 +606,41 @@ def minhash_lsh_dedup(
     sh_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Full near-dedup pipeline: shingle → MinHash → banded LSH → exact
-    Jaccard verification. Returns verified near-duplicate pairs.
+    Jaccard verification. Returns verified near-duplicate pairs
+    (id_a, id_b, jaccard) as a lazy plan.
 
     Default signature is 16 hashes in 8 bands × 2 rows: the S-curve knee
     (1/bands)^(1/rows) ≈ 0.35 sits below the 0.5 verify threshold, so
     candidate recall at the threshold is HIGHER than the old 8×4 layout
     (knee ≈ 0.59) while signature codegen and shuffle bytes halve; the
     exact-Jaccard verify step keeps precision unchanged. Extra candidates
-    are bounded by max_bucket in lsh_candidates."""
-    # exploded (id, shingle-hash) rows drive signature computation AND
-    # both sides of the verify join (3 consumers) — persist instead of
-    # recomputing the upstream plan per consumer. At corpus scale this is
-    # the staging relation you'd materialize to storage once. The result
-    # (small pair set) is checkpointed eagerly so sh_rows can be
-    # unpersisted before returning — no cached-block leak across calls.
-    # Round 5: shingle_hash_rows (Arrow path — no shingle strings built;
-    # signatures hash longs, the persisted relation + verify joins stay
-    # 8 bytes/element).  Round 6: a caller that already built the
-    # (id, _sh) relation (dedup_pairs_auto's mass estimator) passes it
-    # via ``sh_rows`` so the corpus-wide Arrow pass runs once, not twice.
+    are bounded by max_bucket in lsh_candidates.
+
+    ``sh_rows`` (id, _sh) is read three times by the returned plan (see
+    below); it OVERRIDES text_col/k when given."""
+    # Round 5: shingle_hash_rows (Arrow path — no shingle strings built).
+    # Round 6: a caller that already built the (id, _sh) relation
+    # (dedup_pairs_auto's mass estimator) passes it via ``sh_rows`` so
+    # the corpus-wide Arrow pass runs once, not twice.
     if sh_rows is None:
         sh_rows = shingle_hash_rows(df, text_col, id_col, k)
-    sh_rows = sh_rows.persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = _signatures_from_rows(sh_rows, id_col, num_hashes)
+    # ONE groupBy(id) builds each doc's shingle-hash set (_shingle_sets);
+    # the signature is folded from that set in the same stage (the
+    # aggregate's output is already partitioned on the id, so no second
+    # Exchange). The candidate branch and both verify sides read the same
+    # aggregate, so over file-backed input its Exchange is reused and the
+    # Arrow shingle pass runs once — no cache, no checkpoint, nothing to
+    # release. Over a CACHED input the three reads are not shared (each
+    # self-join side re-instantiates the cached relation's attributes, so
+    # the scans never compare equal): such a caller passes a persisted
+    # ``sh_rows``, as TrainingDataPipeline does.
+    sigs = _signatures_from_rows(
+        _shingle_sets(sh_rows, id_col).select(id_col, F.explode("_shs").alias("_sh")),
+        id_col, num_hashes,
+    )
     cands = lsh_candidates(sigs, id_col=id_col, bands=bands,
                            rows_per_band=num_hashes // bands)
-    pairs = _jaccard_verify_rows(
-        cands, sh_rows, id_col=id_col, threshold=threshold
-    ).localCheckpoint(eager=True)
-    sh_rows.unpersist()
-    return pairs
+    return _jaccard_verify_rows(cands, sh_rows, id_col, threshold)
 
 
 def build_minhash_index(
@@ -1192,33 +1197,45 @@ def _signatures_from_rows(sh_rows: DataFrame, id_col: str, num_hashes: int) -> D
     )
 
 
+def _shingle_sets(sh_rows: DataFrame, id_col: str) -> DataFrame:
+    """(id, _shs): each doc's shingle array from exploded (id, _sh) rows
+    (per-doc distinct already — shingle_hash_rows and word_shingles emit
+    each shingle once per doc). Null ids are dropped here, as the verify
+    joins would: a join-inferred null filter on only some reads of this
+    aggregate would keep Spark from reusing its Exchange across them."""
+    return (
+        sh_rows.filter(F.col(id_col).isNotNull())
+        .groupBy(id_col)
+        .agg(F.collect_list("_sh").alias("_shs"))
+    )
+
+
 def _jaccard_verify_rows(candidates: DataFrame, sh_rows: DataFrame,
                          id_col: str, threshold: float) -> DataFrame:
-    """Exact Jaccard from exploded shingle rows: |A∩B| via a join on the
-    shingle value restricted to candidate pairs, sizes via groupBy counts.
-    All counts exact ints → deterministic ratio.
+    """Exact Jaccard of candidate pairs from exploded (id, _sh) rows: each
+    pair joins the per-doc shingle arrays (_shingle_sets) once per side
+    and |A∩B| = size(array_intersect) — all counts exact ints, so the
+    ratio is the same double an exploded-row join + count computes.
 
-    The shingle and per-doc-size relations are CORPUS-sized — they must
-    shuffle, never broadcast (a persisted shingle relation carries accurate
-    in-memory stats, so without the hint Catalyst happily broadcasts it at
-    mid scale and OOMs at large scale), and a shuffled-hash build of a
-    corpus-sized side can't be guaranteed to fit executor memory either.
-    merge hints pin sort-merge — the only strategy whose memory use is
-    bounded (sort spills) regardless of side sizes."""
-    sizes = sh_rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
-    a = sh_rows.select(F.col(id_col).alias("id_a"), F.col("_sh")).hint("merge")
-    b = sh_rows.select(F.col(id_col).alias("id_b"), F.col("_sh")).hint("merge")
-    inter = (
-        candidates.join(a, "id_a")
-        .join(b, ["id_b", "_sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
+    The per-doc relation is CORPUS-sized — merge hints pin sort-merge,
+    the only join strategy whose memory use is bounded (sort spills)
+    regardless of side sizes; a broadcast of the corpus's shingle arrays
+    OOMs at scale. Both sides read one aggregate hash-partitioned on the
+    id, so only the (small) candidate side shuffles."""
+    sets = _shingle_sets(sh_rows, id_col)
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
     return (
-        inter.join(sa.hint("merge"), "id_a")
+        candidates.join(sa.hint("merge"), "id_a")
         .join(sb.hint("merge"), "id_b")
+        .select(
+            "id_a", "id_b", inter.alias("_inter"),
+            F.size("_sa").alias("_na"), F.size("_sb").alias("_nb"),
+        )
+        # a candidate pair sharing no shingle is not a verified pair at
+        # any threshold (a join on the shingle value never produced it)
+        .filter(F.col("_inter") > 0)
         .withColumn(
             "jaccard",
             F.col("_inter").cast("double")
@@ -1240,10 +1257,11 @@ def connected_components(
     (doc_id, component) where component = min id reachable.
 
     Two physical strategies behind one contract:
-    - edge count ≤ ``small_graph_edges``: driver union-find (path
+    - at most ``small_graph_edges`` pair rows: driver union-find (path
       compression, union by min root — so the root IS the component's min
-      id). The verified pair list is tiny relative to the corpus, so this
-      is the common case even for very large corpora.
+      id) over the pairs, collected once. The verified pair list is tiny
+      relative to the corpus, so this is the common case even for very
+      large corpora.
     - otherwise: distributed min-label propagation + pointer jumping.
 
     Each round does (a) one hop of min-label propagation across edges and
@@ -1262,20 +1280,19 @@ def connected_components(
     any data problem). On a real cluster use reliable checkpoint() to also
     survive executor loss.
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Small-graph fast path: the verified near-dup EDGE set is orders of
-    # magnitude smaller than the corpus (it's the post-threshold pair list,
-    # not the documents). When it fits comfortably on the driver, classic
-    # union-find beats 2×rounds distributed jobs of per-round overhead; the
-    # distributed min-label loop below is the path for edge sets that
-    # don't. The gate is an exact count of the already-materialized
-    # checkpoint — one cheap action either way.
-    if edges.count() <= small_graph_edges:
+    # Small-graph fast path: the verified near-dup pair list is orders of
+    # magnitude smaller than the corpus (it's the post-threshold pair
+    # list, not the documents). It is collected ONCE, capped at
+    # ``small_graph_edges + 1`` rows — that one action is also the gate:
+    # a full list means the graph fits, and classic union-find beats
+    # 2×rounds distributed jobs of per-round overhead. The labels come
+    # back as an Arrow-built LocalRelation: it carries exact size
+    # statistics, so a downstream anti-join broadcasts it with no Python
+    # stage. Past the cap, the distributed min-label loop below runs.
+    rows = pairs.select(id_a, id_b).limit(small_graph_edges + 1).collect()
+    if len(rows) <= small_graph_edges:
+        import pyarrow as pa
+
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -1286,8 +1303,7 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in edges.toLocalIterator():
-            s, d = row.src, row.dst
+        for s, d in rows:
             parent.setdefault(s, s)
             parent.setdefault(d, d)
             rs, rd = find(s), find(d)
@@ -1296,8 +1312,18 @@ def connected_components(
                     parent[rd] = rs
                 else:
                     parent[rs] = rd
-        out = [(x, find(x)) for x in parent]
-        return pairs.sparkSession.createDataFrame(out, "doc_id long, component long")
+        ids = list(parent)
+        table = pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "component": pa.array([find(x) for x in ids], pa.int64()),
+        })
+        return pairs.sparkSession.createDataFrame(table)
+    edges = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

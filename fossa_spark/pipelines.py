@@ -6,17 +6,20 @@ One Model wires the LLM operators into the standard pretraining-data flow:
     read documents
       → quality features + filters (length / punctuation / stopword gates)
       → language ID + allowlist
-      → exact dedup (normalized-hash groupBy, keep min id)
-      → near-dedup (MinHash-LSH pairs → connected via min-pair keep rule)
+      → exact dedup (one groupBy on the normalized text keeps its min-id row)
+      → near-dedup (MinHash-LSH pairs verified from per-doc shingle-hash
+        arrays → connected components, min id of each kept)
       → token counting
       → partitioned parquet write (by predicted lang)
 
-Every stage is a DataFrame transform — the whole pipeline is ONE lazy plan
-until the write; Catalyst pipelines the narrow stages and the only
-shuffles are the dedup groupBys/joins and the final write's partitioning.
-At 100 TB each stage scales independently: the quality gates are
-embarrassingly parallel, dedup is bounded by LSH banding, and the write
-partitions by a low-cardinality key.
+Every stage is a DataFrame transform, and a build runs two actions: the
+verified near-duplicate pairs (small) are collected once to label the
+components, and the write runs the rest. The exact-deduplicated rows and
+their shingle hashes are cached between the two and released after the
+write; the components come back as a local relation, so the write's
+anti-join is a broadcast. At 100 TB each stage scales independently: the
+quality gates are embarrassingly parallel, dedup is bounded by LSH
+banding, and the write partitions by a low-cardinality key.
 """
 
 from __future__ import annotations
@@ -49,9 +52,12 @@ class TrainingDataPipeline(Model):
         self.langs = langs
         self.near_dedup_threshold = near_dedup_threshold
         self.stats: dict[str, int] = {}
+        self._persisted: list[DataFrame] = []
 
     def transform(self, docs: DataFrame) -> DataFrame:
-        """The full lazy plan, write excluded (unit-testable)."""
+        """The cleaned rows, write excluded (unit-testable). Collects the
+        verified near-duplicate pairs; the relations it caches stay cached
+        until :meth:`release` (``build`` calls it after the write)."""
         # adaptive parallelism guard (queries._util.spread rationale):
         # quality_features' stopword HOF is interpreted per-row CPU — on
         # a few-row-group parquet scan it would run on 1-3 of 32 cores
@@ -68,24 +74,33 @@ class TrainingDataPipeline(Model):
         scored = X.language_scores(gated)
         allowed = scored.filter(F.col("pred_lang").isin(*self.langs))
 
-        # exact dedup: keep the minimum doc_id per normalized-text hash
-        keep_exact = (
-            allowed.select("doc_id", D.normalize("text").alias("_norm"))
-            .groupBy("_norm").agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        # `exact` feeds the near-dedup stage (shingles) AND the final
-        # anti-join — persist the filtered/gated relation instead of
+        # exact dedup in ONE aggregation: each normalized text keeps its
+        # whole min-doc_id row, so `allowed` is scanned once. `exact` feeds
+        # the near-dedup stage AND the write — persist it instead of
         # recomputing the whole upstream per consumer (at 100 TB: a
-        # materialized staging table between pipeline phases)
-        exact = allowed.join(keep_exact, "doc_id", "left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
+        # materialized staging table between pipeline phases); build()
+        # releases it after the write.
+        exact = (
+            allowed.groupBy(D.normalize("text").alias("_norm"))
+            .agg(F.min_by(F.struct(*allowed.columns), "doc_id").alias("_row"))
+            .select("_row.*")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        self._persisted.append(exact)
 
         # near-dedup: connected components over the verified pair graph,
         # keep the minimum id of each component (handles duplicate CHAINS
-        # A≈B≈C where pairwise dropping could keep both endpoints)
-        pairs = D.minhash_lsh_dedup(exact, threshold=self.near_dedup_threshold)
+        # A≈B≈C where pairwise dropping could keep both endpoints). The
+        # LSH plan reads the shingle rows three times (signatures and both
+        # verify sides); over a cached input Spark cannot share that
+        # subtree between the reads, so the one Arrow shingle pass is
+        # cached too. The components come back as a small local relation,
+        # so the anti-join below is a broadcast inside the write's plan.
+        sh_rows = D.shingle_hash_rows(exact).persist(StorageLevel.MEMORY_AND_DISK)
+        self._persisted.append(sh_rows)
+        pairs = D.minhash_lsh_dedup(
+            exact, threshold=self.near_dedup_threshold, sh_rows=sh_rows
+        )
         comps = D.connected_components(pairs)
         drop = comps.filter(F.col("doc_id") != F.col("component")).select("doc_id")
         clean = exact.join(drop, "doc_id", "left_anti")
@@ -105,19 +120,26 @@ class TrainingDataPipeline(Model):
         from pyspark.sql import Observation
 
         docs = self.source.read(self.spark)
-        # Observation metrics ride the write's single pass: docs_in is
-        # counted where the source flows INTO the plan and docs_out where
-        # rows reach the sink — no second source scan, no output re-read
-        # (three actions collapsed to one; at 100 TB the difference is a
-        # full extra pass over the corpus).
+        # Observation metrics ride passes the build makes anyway: docs_in
+        # is counted where the source flows INTO the plan and docs_out
+        # where rows reach the sink — no second source scan, no output
+        # re-read (at 100 TB each would be a full extra pass).
         obs_in, obs_out = Observation("docs_in"), Observation("docs_out")
-        out = self.transform(
-            docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        ).observe(obs_out, F.count(F.lit(1)).alias("n"))
-        self.sink.write(out, partition_by=["lang"])
+        try:
+            out = self.transform(
+                docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
+            ).observe(obs_out, F.count(F.lit(1)).alias("n"))
+            self.sink.write(out, partition_by=["lang"])
+        finally:
+            self.release()
         n_in = int(obs_in.get["n"])
         n_out = int(obs_out.get["n"])
         self.stats = {"docs_in": n_in, "docs_out": n_out,
                       "dropped": n_in - n_out}
         self.log(f"pipeline: {self.stats}")
         return self.stats
+
+    def release(self) -> None:
+        """Unpersist every relation ``transform`` cached."""
+        while self._persisted:
+            self._persisted.pop().unpersist()

@@ -483,6 +483,7 @@ def test_pipeline_keeps_one_per_component(spark, docs):
     p = TrainingDataPipeline(spark=spark, min_chars=0, max_punct_ratio=1.0)
     cleaned = p.transform(docs)
     kept = {r.doc_id for r in cleaned.select("doc_id").collect()}
+    p.release()
     pairs = D.minhash_lsh_dedup(docs, threshold=0.5)
     comps = D.connected_components(pairs).collect()
     by_comp = {}
@@ -1503,3 +1504,129 @@ def test_winnow_guarantee_and_density(spark):
     n3 = anchors.filter("rep_id = 3").count()
     dens = len(by_doc[3]) / n3
     assert 0.1 < dens < 0.35, dens  # ~2/(w+1) = 0.2 on random text
+
+
+# -- one-aggregation LSH verify and collect-once components vs the
+#    exploded-row reference (the plan shape minhash_lsh_dedup had before)
+
+def _sibling_corpus(name: str) -> str:
+    import os
+
+    path = os.path.join(os.path.dirname(SF_DIR), name)
+    if not os.path.exists(f"{path}/documents.parquet"):
+        pytest.skip(f"no {name} corpus next to {SF_DIR}")
+    return path
+
+
+def _exploded_row_pairs(docs, threshold: float):
+    """Signatures from exploded (id, _sh) rows, candidates from
+    lsh_candidates, |A∩B| from a join on the shingle value and per-doc
+    sizes from row counts."""
+    sh = D.shingle_hash_rows(docs)
+    cands = D.lsh_candidates(D._signatures_from_rows(sh, "doc_id", 16),
+                             bands=8, rows_per_band=2)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    inter = (
+        cands.join(sh.selectExpr("doc_id id_a", "_sh"), "id_a")
+        .join(sh.selectExpr("doc_id id_b", "_sh"), ["id_b", "_sh"])
+        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("i"))
+    )
+    return (
+        inter.join(sizes.selectExpr("doc_id id_a", "n na"), "id_a")
+        .join(sizes.selectExpr("doc_id id_b", "n nb"), "id_b")
+        .select("id_a", "id_b", (F.col("i").cast("double") / (
+            F.col("na") + F.col("nb") - F.col("i")).cast("double")).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _union_find_components(pairs) -> dict[int, int]:
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "sf0.01"])
+def test_minhash_lsh_dedup_equals_exploded_row_reference(spark, corpus):
+    """The per-doc-array verify returns the reference's pairs with
+    bit-identical jaccard doubles, and the collected components equal a
+    union-find over the reference pairs, at every threshold."""
+    docs = spark.read.parquet(f"{_sibling_corpus(corpus)}/documents.parquet")
+    for threshold in (0.3, 0.5, 0.8):
+        ref = sorted(tuple(r) for r in _exploded_row_pairs(docs, threshold).collect())
+        pairs = D.minhash_lsh_dedup(docs, threshold=threshold)
+        got = sorted(tuple(r) for r in pairs.collect())
+        assert ref, f"{corpus}@{threshold}: fixture should hold near-duplicates"
+        assert got == ref, f"{corpus}@{threshold}: {sorted(set(got) ^ set(ref))[:5]}"
+        comps = {r.doc_id: r.component
+                 for r in D.connected_components(pairs).collect()}
+        assert comps == _union_find_components((a, b) for a, b, _ in ref)
+
+
+def test_connected_components_returns_local_relation(spark):
+    """The small-graph path hands back a LocalRelation (exact size
+    statistics, so a downstream anti-join broadcasts it) built without a
+    Python RDD."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    comps = D.connected_components(pairs)
+    plan = comps._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert sorted(tuple(r) for r in comps.collect()) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+
+
+# -- lsh_candidates bucket cap
+
+
+def _constant_signatures(spark, n: int, value: int):
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.array(*[F.lit(value).cast("long")] * 16).alias("minhash"),
+    )
+
+
+def test_lsh_candidates_drops_overcap_buckets_before_member_lists(spark):
+    """Plan shape: the bucket size is a window count over the bucket hash
+    partitioning and the cap filter runs below the member-list aggregate,
+    so an over-cap bucket never becomes a collect_list buffer; the plan
+    still shuffles on bucket exactly once."""
+    cands = D.lsh_candidates(_constant_signatures(spark, 10, 7), max_bucket=4)
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[-1].splitlines()
+
+    def first(fragment):
+        return next(i for i, line in enumerate(lines) if fragment in line)
+
+    assert first("Window [count(1)") > first("partial_collect_list"), plan
+    assert sum("Exchange hashpartitioning(bucket" in line for line in lines) == 1, plan
+    assert cands.count() == 0  # every band of the 10 identical docs is over cap
+
+
+def test_lsh_candidates_100k_member_bucket_keeps_pair_set(spark):
+    """A 100k-member boilerplate bucket (every band of 100,000 identical
+    signatures collides) is dropped whole; the planted pairs, which share
+    one band each, come out exactly as they do without the skew."""
+    planted = spark.createDataFrame(
+        [
+            (10**6 + 2 * j + s,
+             [10**4 + j, 2 * 10**4 + j] + [10**8 + 100 * j + 16 * s + i for i in range(14)])
+            for j in range(5) for s in (0, 1)
+        ],
+        "doc_id long, minhash array<long>",
+    )
+    expected = {(10**6 + 2 * j, 10**6 + 2 * j + 1) for j in range(5)}
+    alone = {tuple(r) for r in D.lsh_candidates(planted).collect()}
+    skewed = {tuple(r) for r in D.lsh_candidates(
+        _constant_signatures(spark, 100_000, 7).unionByName(planted)).collect()}
+    assert alone == expected
+    assert skewed == expected

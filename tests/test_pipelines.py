@@ -52,9 +52,38 @@ def test_pipeline_transform_drops_near_dups(spark):
     with connector_resolver.context(data=SF_DIR, out="/tmp/unused"):
         cleaned = p.transform(docs)
         kept = {r.doc_id for r in cleaned.select("doc_id").collect()}
+        p.release()
         pairs = minhash_lsh_dedup(docs, threshold=0.5).collect()
     assert pairs, "fixture should contain near-duplicates"
     for r in pairs:
         assert not (r.id_a in kept and r.id_b in kept), (
             f"near-dup pair ({r.id_a},{r.id_b}) both kept"
         )
+
+
+def test_build_spark_jobs_bounded(spark, tmp_path):
+    """One build() as an Engine job runs at most 17 Spark jobs, counted by
+    the job's group: exact dedup in one aggregation, the LSH verify over
+    per-doc arrays, the verified pairs collected once, then the write."""
+    eng = Engine(spark, max_concurrent_tasks=1)
+    eng.register_model(TrainingDataPipeline)
+    tid = eng.submit(Job(model_class="TrainingDataPipeline",
+                         resolver_context={"data": SF_DIR, "out": str(tmp_path)}))
+    res = eng.wait(tid)
+    eng.shutdown(wait=False)
+    assert res.status is JobStatus.COMPLETE, res.error
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(tid)
+    assert 0 < len(jobs) <= 17, len(jobs)
+
+
+def test_build_releases_what_it_persists(spark, tmp_path):
+    """build() unpersists every relation it cached, so no persisted RDD
+    outlives it (and no later build silently reuses an earlier one's
+    cached rows)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with connector_resolver.context(data=SF_DIR, out=str(tmp_path)):
+        stats = TrainingDataPipeline(spark=spark).build()
+    assert stats["docs_out"] > 0
+    leaked = set(jsc.getPersistentRDDs().keys()) - before
+    assert not leaked, leaked
