@@ -607,7 +607,10 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Full near-dedup pipeline: shingle → MinHash → banded LSH → exact
     Jaccard verification. Returns verified near-duplicate pairs
-    (id_a, id_b, jaccard) as a lazy plan.
+    (id_a, id_b, jaccard) as a LAZY plan: nothing is cached or computed
+    here, and every action on the result runs the whole plan — a caller
+    that uses the pairs more than once persists them (connected_components
+    does).
 
     Default signature is 16 hashes in 8 bands × 2 rows: the S-curve knee
     (1/bands)^(1/rows) ≈ 0.35 sits below the 0.5 verify threshold, so
@@ -616,28 +619,23 @@ def minhash_lsh_dedup(
     exact-Jaccard verify step keeps precision unchanged. Extra candidates
     are bounded by max_bucket in lsh_candidates.
 
-    ``sh_rows`` (id, _sh) is read three times by the returned plan (see
-    below); it OVERRIDES text_col/k when given."""
+    ``sh_rows`` (id, _sh) OVERRIDES text_col/k when given. The plan reads
+    the per-doc shingle arrays three times (signatures and both verify
+    sides). Over file-backed input Spark reuses that aggregate's Exchange
+    and the Arrow shingle pass runs once per action; adaptive execution
+    reuses no Exchange above a CACHED scan, so over a cached ``df`` the
+    pass runs three times per action — such a caller passes ``sh_rows``
+    built from a persisted relation (TrainingDataPipeline does)."""
     # Round 5: shingle_hash_rows (Arrow path — no shingle strings built).
     # Round 6: a caller that already built the (id, _sh) relation
     # (dedup_pairs_auto's mass estimator) passes it via ``sh_rows`` so
     # the corpus-wide Arrow pass runs once, not twice.
     if sh_rows is None:
         sh_rows = shingle_hash_rows(df, text_col, id_col, k)
-    # ONE groupBy(id) builds each doc's shingle-hash set (_shingle_sets);
-    # the signature is folded from that set in the same stage (the
-    # aggregate's output is already partitioned on the id, so no second
-    # Exchange). The candidate branch and both verify sides read the same
-    # aggregate, so over file-backed input its Exchange is reused and the
-    # Arrow shingle pass runs once — no cache, no checkpoint, nothing to
-    # release. Over a CACHED input the three reads are not shared (each
-    # self-join side re-instantiates the cached relation's attributes, so
-    # the scans never compare equal): such a caller passes a persisted
-    # ``sh_rows``, as TrainingDataPipeline does.
-    sigs = _signatures_from_rows(
-        _shingle_sets(sh_rows, id_col).select(id_col, F.explode("_shs").alias("_sh")),
-        id_col, num_hashes,
-    )
+    # ONE groupBy(id) builds each doc's shingle-hash array (shingle_sets);
+    # the signature is folded from it in the same stage (the aggregate's
+    # output is already partitioned on the id, so no second Exchange).
+    sigs = minhash_signatures(shingle_sets(sh_rows, id_col), id_col, "_shs", num_hashes)
     cands = lsh_candidates(sigs, id_col=id_col, bands=bands,
                            rows_per_band=num_hashes // bands)
     return _jaccard_verify_rows(cands, sh_rows, id_col, threshold)
@@ -1197,7 +1195,7 @@ def _signatures_from_rows(sh_rows: DataFrame, id_col: str, num_hashes: int) -> D
     )
 
 
-def _shingle_sets(sh_rows: DataFrame, id_col: str) -> DataFrame:
+def shingle_sets(sh_rows: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, _shs): each doc's shingle array from exploded (id, _sh) rows
     (per-doc distinct already — shingle_hash_rows and word_shingles emit
     each shingle once per doc). Null ids are dropped here, as the verify
@@ -1213,7 +1211,7 @@ def _shingle_sets(sh_rows: DataFrame, id_col: str) -> DataFrame:
 def _jaccard_verify_rows(candidates: DataFrame, sh_rows: DataFrame,
                          id_col: str, threshold: float) -> DataFrame:
     """Exact Jaccard of candidate pairs from exploded (id, _sh) rows: each
-    pair joins the per-doc shingle arrays (_shingle_sets) once per side
+    pair joins the per-doc shingle arrays (shingle_sets) once per side
     and |A∩B| = size(array_intersect) — all counts exact ints, so the
     ratio is the same double an exploded-row join + count computes.
 
@@ -1222,7 +1220,7 @@ def _jaccard_verify_rows(candidates: DataFrame, sh_rows: DataFrame,
     regardless of side sizes; a broadcast of the corpus's shingle arrays
     OOMs at scale. Both sides read one aggregate hash-partitioned on the
     id, so only the (small) candidate side shuffles."""
-    sets = _shingle_sets(sh_rows, id_col)
+    sets = shingle_sets(sh_rows, id_col)
     sa = sets.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb"))
@@ -1244,6 +1242,41 @@ def _jaccard_verify_rows(candidates: DataFrame, sh_rows: DataFrame,
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def _union_find_components(spark, edges) -> DataFrame:
+    """(doc_id, component) from (src, dst) rows on the driver: union-find
+    with path compression and union by min root, so the root IS the
+    component's min id. An Arrow-built LocalRelation: it carries exact
+    size statistics, so a downstream anti-join broadcasts it with no
+    Python stage."""
+    import pyarrow as pa
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for s, d in edges:
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:  # union by min root → component = min reachable id
+            if rs < rd:
+                parent[rd] = rs
+            else:
+                parent[rs] = rd
+    ids = list(parent)
+    table = pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "component": pa.array([find(x) for x in ids], pa.int64()),
+    })
+    return spark.createDataFrame(table)
 
 
 def connected_components(
@@ -1284,46 +1317,26 @@ def connected_components(
     # magnitude smaller than the corpus (it's the post-threshold pair
     # list, not the documents). It is collected ONCE, capped at
     # ``small_graph_edges + 1`` rows — that one action is also the gate:
-    # a full list means the graph fits, and classic union-find beats
-    # 2×rounds distributed jobs of per-round overhead. The labels come
-    # back as an Arrow-built LocalRelation: it carries exact size
-    # statistics, so a downstream anti-join broadcasts it with no Python
-    # stage. Past the cap, the distributed min-label loop below runs.
-    rows = pairs.select(id_a, id_b).limit(small_graph_edges + 1).collect()
-    if len(rows) <= small_graph_edges:
-        import pyarrow as pa
-
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in rows:
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:  # union by min root → component = min reachable id
-                if rs < rd:
-                    parent[rd] = rs
-                else:
-                    parent[rs] = rd
-        ids = list(parent)
-        table = pa.table({
-            "doc_id": pa.array(ids, pa.int64()),
-            "component": pa.array([find(x) for x in ids], pa.int64()),
-        })
-        return pairs.sparkSession.createDataFrame(table)
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # a list within the cap fits the driver, and classic union-find beats
+    # 2×rounds distributed jobs of per-round overhead. Past the cap, the
+    # distributed min-label loop below runs. The pairs stay persisted
+    # across the gate, so the edge checkpoint reads the rows the gate
+    # already computed instead of re-running the plan that produced them
+    # (for minhash_lsh_dedup's lazy pairs, the whole LSH).
+    pairs = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        rows = pairs.limit(small_graph_edges + 1).collect()
+        if len(rows) <= small_graph_edges:
+            return _union_find_components(pairs.sparkSession, rows)
+        edges = (
+            pairs.unionByName(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        pairs.unpersist()
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

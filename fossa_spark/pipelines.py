@@ -15,9 +15,10 @@ One Model wires the LLM operators into the standard pretraining-data flow:
 Every stage is a DataFrame transform, and a build runs two actions: the
 verified near-duplicate pairs (small) are collected once to label the
 components, and the write runs the rest. The exact-deduplicated rows and
-their shingle hashes are cached between the two and released after the
-write; the components come back as a local relation, so the write's
-anti-join is a broadcast. At 100 TB each stage scales independently: the
+their per-doc shingle-hash arrays are cached between the two and released
+after the write; the components come back as a local relation, so the
+write's anti-join is a broadcast, and a rebalance on the language sizes
+the written files. At 100 TB each stage scales independently: the
 quality gates are embarrassingly parallel, dedup is bounded by LSH
 banding, and the write partitions by a low-cardinality key.
 """
@@ -91,15 +92,21 @@ class TrainingDataPipeline(Model):
         # near-dedup: connected components over the verified pair graph,
         # keep the minimum id of each component (handles duplicate CHAINS
         # A≈B≈C where pairwise dropping could keep both endpoints). The
-        # LSH plan reads the shingle rows three times (signatures and both
-        # verify sides); over a cached input Spark cannot share that
-        # subtree between the reads, so the one Arrow shingle pass is
-        # cached too. The components come back as a small local relation,
-        # so the anti-join below is a broadcast inside the write's plan.
-        sh_rows = D.shingle_hash_rows(exact).persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(sh_rows)
+        # LSH plan reads the per-doc shingle-hash arrays three times
+        # (signatures and both verify sides); adaptive execution reuses no
+        # Exchange above a cached scan, so the arrays themselves are
+        # cached: one Arrow shingle pass and one shuffle on doc_id, and
+        # the reads of the exploded view below regroup them on their own
+        # partitioning without another shuffle. The components come back
+        # as a small local relation, so the anti-join below is a broadcast
+        # inside the write's plan.
+        sets = D.shingle_sets(D.shingle_hash_rows(exact)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        self._persisted.append(sets)
         pairs = D.minhash_lsh_dedup(
-            exact, threshold=self.near_dedup_threshold, sh_rows=sh_rows
+            exact, threshold=self.near_dedup_threshold,
+            sh_rows=sets.select("doc_id", F.explode("_shs").alias("_sh")),
         )
         comps = D.connected_components(pairs)
         drop = comps.filter(F.col("doc_id") != F.col("component")).select("doc_id")
@@ -124,12 +131,16 @@ class TrainingDataPipeline(Model):
         # is counted where the source flows INTO the plan and docs_out
         # where rows reach the sink — no second source scan, no output
         # re-read (at 100 TB each would be a full extra pass).
+        # The rebalance on lang lets adaptive execution size the written
+        # files: small partitions merge and a skewed language splits (the
+        # broadcast anti-join alone would write exact's partitioning,
+        # one file per partition and language).
         obs_in, obs_out = Observation("docs_in"), Observation("docs_out")
         try:
             out = self.transform(
                 docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
             ).observe(obs_out, F.count(F.lit(1)).alias("n"))
-            self.sink.write(out, partition_by=["lang"])
+            self.sink.write(out.hint("rebalance", "lang"), partition_by=["lang"])
         finally:
             self.release()
         n_in = int(obs_in.get["n"])

@@ -1618,13 +1618,18 @@ def q_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full training-data pipeline transform (quality gates → langid →
-    exact dedup → MinHash-LSH near-dedup → token annotations) as one lazy
-    plan. rows-only (near-dedup stage uses seeded xxhash64)."""
+    exact dedup → MinHash-LSH near-dedup → token annotations). The
+    transform runs one action — it collects the verified near-duplicate
+    pairs — and the relations it cached for that are released before
+    returning, so the returned plan recomputes the exact-dedup rows when
+    collected. rows-only (near-dedup stage uses seeded xxhash64)."""
     from fossa_spark.pipelines import TrainingDataPipeline
 
     docs = load(spark, sf_dir, "documents")
     p = TrainingDataPipeline(spark=spark)
-    return p.transform(docs).orderBy("doc_id")
+    out = p.transform(docs).orderBy("doc_id")
+    p.release()
+    return out
 
 
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1585,6 +1585,35 @@ def test_connected_components_returns_local_relation(spark):
         (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
 
 
+def test_connected_components_large_graph_path_computes_pairs_once(spark, docs):
+    """Forced past the small-graph cap, the distributed path builds its
+    edges from the pair rows the gate already computed: over lazy minhash
+    pairs it runs fewer extra Spark jobs, against the same pairs handed in
+    as a local relation, than one more computation of the pairs costs."""
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    pairs = D.minhash_lsh_dedup(docs, threshold=0.5)
+    pair_jobs, rows = jobs("cc_pairs", pairs.collect)
+    local = spark.createDataFrame([(r.id_a, r.id_b) for r in rows], "id_a long, id_b long")
+
+    def components(p):
+        return lambda: sorted(
+            tuple(r) for r in D.connected_components(p, small_graph_edges=0).collect())
+
+    local_jobs, want = jobs("cc_local", components(local))
+    lazy_jobs, got = jobs("cc_lazy", components(pairs))
+    assert got == want
+    assert lazy_jobs - local_jobs < pair_jobs, (lazy_jobs, local_jobs, pair_jobs)
+
+
 # -- lsh_candidates bucket cap
 
 

@@ -64,7 +64,10 @@ def test_pipeline_transform_drops_near_dups(spark):
 def test_build_spark_jobs_bounded(spark, tmp_path):
     """One build() as an Engine job runs at most 17 Spark jobs, counted by
     the job's group: exact dedup in one aggregation, the LSH verify over
-    per-doc arrays, the verified pairs collected once, then the write."""
+    cached per-doc arrays, the verified pairs collected once, then the
+    rebalanced write. Counted as the suite runs (``SPARK_GRAFT_CPUS`` =
+    nproc, 8 shuffle partitions); with more cores than shuffle partitions
+    the shingle pass's parallelism guard adds one repartition stage."""
     eng = Engine(spark, max_concurrent_tasks=1)
     eng.register_model(TrainingDataPipeline)
     tid = eng.submit(Job(model_class="TrainingDataPipeline",

@@ -2,37 +2,39 @@
 working tree.
 
     python3 tools/ab_bench.py --workload llm_pipeline --seeds 21-30
-    python3 tools/ab_bench.py --workload etl_jobs --seeds 1-3 --base HEAD~1
+    python3 tools/ab_bench.py --workload etl_jobs --seeds 1-3 --base HEAD~2
 
-The base side is checked out into a temporary ``git worktree`` (removed
-at exit), or read from an existing checkout given with ``--base-dir``.
-The change side is the working tree, or ``--change-dir``: give a clean
-checkout there when the working tree holds build or test leftovers, since
-the benchmark runs in the checkout it is started from.  For each seed it runs ``perfbench/run.py --workload W --seed S`` once on
-each side, alternating which side runs first, each in its own checkout
-directory with the same settings.  Run length defaults to
-``BENCHMARK.json``'s ``run_seconds``.
+Both sides run from clean copies in one temporary directory, removed at
+exit: the base side is ``git archive`` of ``--base`` (default ``HEAD~1``),
+the change side is every tracked and untracked, not-ignored file of the
+working tree, so neither side sees build or test leftovers.  For each seed
+it runs ``BENCHMARK.json``'s command with ``--workload W --seed S
+--seconds <run_seconds> --trace 0`` once on each side, alternating which
+side runs first, and prints each run's result line.
 
-For every end-to-end metric in ``BENCHMARK.json`` it prints each side's
-median and quartiles, the change's win share (pairs where the change is
-better, ties counting for neither) and whether the claim rule holds: the
+For every end-to-end metric in ``BENCHMARK.json`` it then prints each
+side's median and quartiles, the change's win share (pairs where the change
+is better, ties counting for neither) and whether the claim rule holds: the
 change wins at least nine pairs in ten and the medians differ by more than
-the base's interquartile distance.  Each run's last stdout line is also
-written to ``--out`` (JSON lines) when given.  Only ``perfbench`` is
-invoked; nothing here edits it.
+the base's interquartile distance.  Only ``perfbench`` is invoked; nothing
+here edits it.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
+import shutil
 import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+BENCH = json.loads((ROOT / "BENCHMARK.json").read_text())
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -51,10 +53,29 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def run_side(checkout: Path, workload: str, seed: int, seconds: float) -> dict:
+def git(*args: str) -> bytes:
+    return subprocess.run(["git", *args], cwd=ROOT, check=True,
+                          capture_output=True).stdout
+
+
+def archive_commit(commit: str, dest: Path) -> None:
+    with tarfile.open(fileobj=io.BytesIO(git("archive", "--format=tar", commit))) as tar:
+        tar.extractall(dest, filter="data")
+
+
+def copy_working_tree(dest: Path) -> None:
+    listed = git("ls-files", "-z", "--cached", "--others", "--exclude-standard")
+    for name in {n.decode() for n in listed.split(b"\0") if n}:
+        src = ROOT / name
+        if src.is_file():  # a deleted tracked file is still listed
+            (dest / name).parent.mkdir(parents=True, exist_ok=True)
+            shutil.copy2(src, dest / name)
+
+
+def run_side(checkout: Path, workload: str, seed: int) -> dict:
     """One benchmark run; returns its final JSON line."""
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    cmd = [*BENCH["command"], "--workload", workload, "--seed", str(seed),
+           "--seconds", str(BENCH["run_seconds"]), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -67,10 +88,10 @@ def value(result: dict, name: str) -> float:
     return result["metrics"][name]["value"]
 
 
-def summarize(metrics: list[dict], pairs: list[tuple[dict, dict]]) -> list[str]:
+def summarize(pairs: list[tuple[dict, dict]]) -> list[str]:
     out = [f"{'metric':<20} {'base q1/med/q3':>26} {'change q1/med/q3':>26} "
            f"{'wins':>6} claim"]
-    for m in metrics:
+    for m in BENCH["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         base = [value(b, name) for b, _ in pairs]
         chg = [value(c, name) for _, c in pairs]
@@ -93,41 +114,21 @@ def main() -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 21-30 or 1,2,5")
     ap.add_argument("--base", default="HEAD~1", help="commit for the base side")
-    ap.add_argument("--base-dir", help="existing checkout to use as the base side")
-    ap.add_argument("--change-dir", default=str(ROOT), help="checkout for the change side")
-    ap.add_argument("--seconds", type=float,
-                    default=json.loads((ROOT / "BENCHMARK.json").read_text())["run_seconds"])
-    ap.add_argument("--out", help="append every run's result line here (JSON lines)")
     args = ap.parse_args()
 
-    metrics = json.loads((ROOT / "BENCHMARK.json").read_text())["end_to_end"]
+    pairs = []
     with tempfile.TemporaryDirectory(prefix="ab_bench_") as tmp:
-        base_dir = Path(args.base_dir) if args.base_dir else Path(tmp) / "base"
-        if not args.base_dir:
-            subprocess.run(["git", "worktree", "add", "--detach", str(base_dir), args.base],
-                           cwd=ROOT, check=True, capture_output=True)
-        try:
-            pairs = []
-            for i, seed in enumerate(parse_seeds(args.seeds)):
-                sides = {"base": base_dir, "change": Path(args.change_dir)}
-                order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
-                res = {}
-                for side in order:
-                    res[side] = run_side(sides[side], args.workload, seed, args.seconds)
-                    if args.out:
-                        with open(args.out, "a") as f:
-                            f.write(json.dumps({"side": side, "seed": seed,
-                                                "workload": args.workload, **res[side]}) + "\n")
-                pairs.append((res["base"], res["change"]))
-                print(f"seed {seed}: " + "  ".join(
-                    f"{m['name']} {value(res['base'], m['name']):.3f}"
-                    f"→{value(res['change'], m['name']):.3f}" for m in metrics),
-                    flush=True)
-        finally:
-            if not args.base_dir:
-                subprocess.run(["git", "worktree", "remove", "--force", str(base_dir)],
-                               cwd=ROOT, capture_output=True)
-    print("\n".join(summarize(metrics, pairs)))
+        sides = {"base": Path(tmp) / "base", "change": Path(tmp) / "change"}
+        archive_commit(args.base, sides["base"])
+        copy_working_tree(sides["change"])
+        for i, seed in enumerate(parse_seeds(args.seeds)):
+            res = {}
+            for side in (["base", "change"] if i % 2 == 0 else ["change", "base"]):
+                res[side] = run_side(sides[side], args.workload, seed)
+                print(json.dumps({"side": side, "workload": args.workload,
+                                  "seed": seed, **res[side]}), flush=True)
+            pairs.append((res["base"], res["change"]))
+    print("\n".join(summarize(pairs)))
     return 0
 
 
