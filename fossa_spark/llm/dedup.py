@@ -217,8 +217,7 @@ def ngram_jaccard_pairs(
     # the capped shingle relation feeds FOUR consumers (sizes + both join
     # sides); persist it once instead of recomputing the explode
     # +df-filter per consumer, checkpoint the (small) verified pair set
-    # eagerly so the cache can be released before returning — the same
-    # staging pattern minhash_lsh_dedup uses
+    # eagerly so the cache can be released before returning
     kept = sh.join(
         # keep the count from the cap step: it IS the document frequency
         # over the capped universe, so _setsim_core skips its own dfreq
@@ -259,154 +258,6 @@ def ngram_jaccard_pairs(
     return pairs
 
 
-# Bump when anything upstream of the verified pair relation changes
-# semantics (tokenization, hash family, prefix filter, jaccard math) —
-# the staged cache below must never serve rows an older algorithm wrote.
-_PAIR_ALGO_VERSION = 1
-
-
-def staged_ngram_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    min_jaccard: float = 0.5,
-    max_df: int = 100,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs`, staged to parquet once per corpus
-    fingerprint (VERDICT r5 item 3).
-
-    Three query-inventory consumers (q_dedup_ngram, q_cluster_keep,
-    q_split_leakage_safe) derive from the SAME verified near-dup pair
-    relation; recomputing the shingle → prefix-join → verify chain per
-    consumer tripled the dominant cost of the sf1 tail.  This is the
-    build_minhash_index persistence pattern applied to the pair relation:
-    the first consumer computes and writes it, later consumers (same
-    session or not) read ~KBs of parquet.  At 100 TB this is also the
-    operational shape — the pair relation is per-corpus-snapshot state,
-    not per-query work.
-
-    Correctness: the cache key is sha256 over (algo version, k,
-    min_jaccard, max_df, and every input file's path+size+mtime_ns), so
-    a changed corpus or changed parameters can never serve stale rows;
-    the relation itself is deterministic (exact counts, int64 hashes), so
-    write-then-read is value-identical to direct computation.  Any cache
-    I/O failure falls back to computing directly — staging is an
-    optimization, never a correctness dependency.  Non-file-backed
-    inputs (no ``inputFiles()``) skip staging entirely.
-    """
-    return _staged_parquet(
-        df,
-        lambda: ngram_jaccard_pairs(df, text_col, id_col, k, min_jaccard, max_df),
-        prefix="ngram_pairs",
-        params=[_PAIR_ALGO_VERSION, k, min_jaccard, max_df, text_col, id_col],
-        cache_root=cache_root,
-    )
-
-
-def staged_shingle_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """:func:`shingle_hash_rows`, staged to parquet once per corpus
-    fingerprint — the :func:`staged_ngram_pairs` pattern one level
-    further upstream (round 6).
-
-    The (id, _sh int64) relation is the shared input of the whole
-    MinHash family (signatures, LSH buckets, exact-Jaccard verify); the
-    q_dedup_near / q_dedup_minhash_exact / q_dedup_containment queries
-    each recomputed the corpus-wide Arrow pass.  Per-corpus-snapshot
-    state belongs in storage, computed once — at 100 TB this relation IS
-    the staged tokenization table a production dedup pipeline
-    materializes before any signature work.
-
-    ONLY sound for a df read directly from files: the fingerprint is
-    (algo version, k, cols, input file path+size+mtime), so a FILTERED
-    or otherwise derived frame would collide with its base corpus —
-    callers with derived inputs (e.g. the pipeline's post-exact-dedup
-    stage) must keep calling :func:`shingle_hash_rows` directly.
-    _staged_parquet already skips frames whose lineage has non-file
-    sources, but it cannot detect a filter over the same files; the
-    caller contract does."""
-    return _staged_parquet(
-        df,
-        lambda: shingle_hash_rows(df, text_col, id_col, k),
-        prefix=f"shingle_rows_k{k}",
-        params=["shingle_rows_v1", k, text_col, id_col],
-        cache_root=cache_root,
-    )
-
-
-def _staged_parquet(
-    df: DataFrame,
-    compute,
-    prefix: str,
-    params: list,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """Stage ``compute()``'s result to parquet keyed by (params + the
-    input files' path/size/mtime fingerprint); serve later calls from
-    the staged copy.  Falls back to computing directly on any cache or
-    fingerprint failure — staging is an optimization, never a
-    correctness dependency.  See staged_ngram_pairs' docstring for the
-    key-soundness argument."""
-    import hashlib
-    import json
-    import os
-    import shutil
-    import uuid
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        files = []
-    if not files:
-        return compute()
-    try:
-        stats = []
-        for f in files:
-            p = f.removeprefix("file:")
-            st = os.stat(p)
-            stats.append((p, st.st_size, st.st_mtime_ns))
-    except OSError:
-        return compute()
-    key = hashlib.sha256(json.dumps(params + [stats]).encode()).hexdigest()[:24]
-    from fossa_spark.sources import _default_cache_root
-
-    root = cache_root or _default_cache_root()
-    final = os.path.join(root, f"{prefix}_{key}")
-    spark = df.sparkSession
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return spark.read.parquet(final)
-    out = compute()
-    try:
-        os.makedirs(root, exist_ok=True)
-        # prune: fixture regeneration changes mtimes → new keys every
-        # round; keep the newest entries per prefix so the cache can't
-        # grow unboundedly across rounds
-        entries = sorted(
-            (e for e in os.listdir(root) if e.startswith(f"{prefix}_")),
-            key=lambda e: os.path.getmtime(os.path.join(root, e)),
-        )
-        for stale in entries[:-15]:
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
-        tmp = os.path.join(root, f"_tmp_{key}_{uuid.uuid4().hex}")
-        out.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, final)  # atomic: losers of the race fall through
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.exists(os.path.join(final, "_SUCCESS")):
-            return spark.read.parquet(final)
-    except Exception:
-        pass  # staging failed — the computed relation is still correct
-    return out
-
-
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -438,9 +289,10 @@ def containment_pairs(
     sh = sh_rows.select(
         F.col(id_col).alias("doc_id"), F.col("_sh").alias("shingle")
     )
-    # same staging as ngram_jaccard_pairs, but the overlap filter lands
-    # BEFORE the eager checkpoint — materializing the unfiltered pair set
-    # (via ngram_jaccard_pairs(min_jaccard=0)) measured 2× the runtime
+    # same persist + checkpoint as ngram_jaccard_pairs, but the overlap
+    # filter lands BEFORE the eager checkpoint — materializing the
+    # unfiltered pair set (via ngram_jaccard_pairs(min_jaccard=0))
+    # measured 2× the runtime
     kept = sh.join(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -682,10 +534,8 @@ def build_minhash_index(
     # independent bucketed writes as CONCURRENT jobs (guide §2.6) —
     # they touch disjoint tables and only read the persisted sh_rows;
     # the append path (append_to_minhash_index) has used this shape
-    # since round 7, the cold build now does too (round 15: with the
-    # stage cache scoped per process, the build runs in the timed path
-    # every run — measured 9.7 s sequential at sf0.1, the two smaller
-    # writes fully overlap the bands write)
+    # since round 7, the cold build does too (measured 9.7 s sequential
+    # at sf0.1; the two smaller writes fully overlap the bands write)
     sh_rows.count()
     from concurrent.futures import ThreadPoolExecutor
 
@@ -795,52 +645,6 @@ def build_exact_index(
                    sort_by="text_hash")
 
 
-def staged_exact_index(
-    corpus: DataFrame,
-    spark,
-    table_prefix: str,
-    work_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 16,
-    cache_root: str | None = None,
-) -> str:
-    """:func:`build_exact_index`, staged per corpus fingerprint — the
-    staged_minhash_index pattern for the digest table, for callers that
-    MUTATE their index per run (the streaming ingest loop appends every
-    batch's novel hashes): the cached build is immutable, each run gets a
-    hard-linked copy registered as ``{table_prefix}_digest`` with the
-    same CLUSTERED BY spec, so appends stay run-local and probes stay
-    shuffle-free.  Returns the digest table name."""
-    from fossa_spark.sources import stage_bucketed_tables
-
-    def build(prefix: str, path: str) -> None:
-        build_exact_index(
-            corpus, spark, f"{prefix}_digest", f"{path}/digest",
-            text_col, id_col, buckets,
-        )
-        # completion marker table (the stage machinery keys on meta/_SUCCESS)
-        corpus.sparkSession.createDataFrame(
-            [(1,)], "format_version int"
-        ).write.mode("overwrite").option("path", f"{path}/meta").saveAsTable(
-            f"{prefix}_meta"
-        )
-
-    stage_bucketed_tables(
-        corpus,
-        spark,
-        table_prefix,
-        work_dir,
-        cache_prefix="exact_idx",
-        params=["exact_idx_v1", buckets, text_col, id_col],
-        tables={"digest": ("text_hash", "text_hash"), "meta": None},
-        buckets=buckets,
-        build=build,
-        cache_root=cache_root,
-    )
-    return f"{table_prefix}_digest"
-
-
 def append_to_exact_index(
     new_docs: DataFrame,
     spark,
@@ -919,74 +723,6 @@ def incremental_exact_dedup(
         .agg(F.min("_corpus_id").alias("dup_of"))
         .withColumn("keep", F.col("dup_of").isNull())
     )
-
-
-def staged_minhash_index(
-    corpus: DataFrame,
-    spark,
-    table_prefix: str,
-    work_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_hashes: int = 16,
-    bands: int = 8,
-    buckets: int = 16,
-    cache_root: str | None = None,
-) -> None:
-    """:func:`build_minhash_index`, staged per corpus fingerprint
-    (round 7, VERDICT r6 item 3) — the :func:`staged_ngram_pairs`
-    pattern applied to the index itself.
-
-    The streaming near-dedup query (and any daily incremental loop
-    restarted from scratch) paid a full index cold-build per run even
-    though the corpus had not changed; the index is per-corpus-snapshot
-    state, so build it once into the stage cache and serve later runs
-    from there.  Because callers MUTATE their index (the between-batch
-    ``append_to_minhash_index`` folds), the staged copy is IMMUTABLE:
-    each call copies the bucketed parquet files into ``work_dir`` (an
-    OS-level file copy preserves the bucket layout — Spark derives the
-    bucket id from the file name) and registers fresh catalog tables
-    under ``table_prefix`` with the same CLUSTERED BY spec, so the
-    zero-shuffle probe property and append re-clustering survive
-    verbatim (prototype-verified: copied table plans `Bucketed: true`,
-    no index-side Exchange; insertInto grows the copy, never the cache).
-
-    Key soundness and the copy/DDL mechanics live in
-    :func:`fossa_spark.sources.stage_bucketed_tables` (round 7 factored
-    the machinery out so the IVF index could stage the same way): the
-    fingerprint includes the corpus's normalized ANALYZED-PLAN string,
-    so FILTERED/derived variants of the same files (the streaming
-    query's corpus is a doc_id % filter over documents.parquet) are
-    safe.  Any staging failure falls back to a direct build.
-    """
-    from fossa_spark.sources import stage_bucketed_tables
-
-    def build(prefix: str, path: str) -> None:
-        build_minhash_index(
-            corpus, prefix, path, text_col, id_col, k, num_hashes, bands,
-            buckets,
-        )
-
-    stage_bucketed_tables(
-        corpus,
-        spark,
-        table_prefix,
-        work_dir,
-        cache_prefix="minhash_idx",
-        params=["minhash_idx_v1", INDEX_FORMAT_VERSION, k, num_hashes,
-                bands, buckets, text_col, id_col],
-        tables={
-            "bands": ("bucket", "bucket"),
-            "shingles": (id_col, id_col),
-            "sizes": (id_col, id_col),
-            "meta": None,
-        },
-        buckets=buckets,
-        build=build,
-        cache_root=cache_root,
-    )
-    _check_index_format(spark, table_prefix)
 
 
 def append_to_minhash_index(
@@ -1506,73 +1242,6 @@ def simhash_table_wide(
     )
 
 
-def staged_simhash_wide(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cache_root: str | None = None,
-) -> DataFrame:
-    """:func:`simhash_table_wide` staged to parquet once per corpus
-    fingerprint — the staged_simhash_table contract (the 120-aggregate
-    pass is per-corpus-snapshot state)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_simhashw_")
-
-    def build(into: str) -> None:
-        simhash_table_wide(df, text_col, id_col).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        df, out,
-        cache_prefix="simhash_wide",
-        params=["simhash_wide_v1", text_col, id_col],
-        build=build,
-        cache_root=cache_root,
-    )
-    return df.sparkSession.read.parquet(out)
-
-
-def staged_simhash_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
-    cache_root: str | None = None,
-    bit_source: str = "xxhash64",
-) -> DataFrame:
-    """:func:`simhash_table`, staged to parquet once per corpus
-    fingerprint (round 8) — the staged_shingle_rows idea for the SimHash
-    family: the signature pass is 64 conditional aggregates whose
-    codegen alone costs ~2 s per action at any data size, and the table
-    is per-corpus-snapshot state a production pipeline materializes
-    once.  Served via hard links (sources.stage_files); only sound for a
-    df read directly from files (same contract as staged_shingle_rows —
-    the fingerprint covers the input files + analyzed plan)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_simhash_")
-
-    def build(into: str) -> None:
-        simhash_table(df, text_col, id_col, bits, bit_source).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        df, out,
-        cache_prefix="simhash_tab",
-        params=["simhash_tab_v1", bits, text_col, id_col, bit_source],
-        build=build,
-        cache_root=cache_root,
-    )
-    return df.sparkSession.read.parquet(out)
-
-
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1590,7 +1259,7 @@ def simhash_pairs(
     formulation that survives a corpus that doesn't fit one machine.
 
     ``sigs``: optional pre-computed (id_col, sig) table (e.g.
-    :func:`staged_simhash_table`) — OVERRIDES text_col entirely when
+    :func:`simhash_table`) — OVERRIDES text_col entirely when
     given (the sh_rows convention: the caller owns signature semantics
     and must cover df exactly).  ``bits`` must match the signature
     width used to build ``sigs`` (60 for the md5 bit source).
@@ -1712,7 +1381,7 @@ def simhash_dedup(
     sig, so there is no tie to break.
 
     ``sigs``: optional pre-computed (id_col, sig1, sig2) table (e.g.
-    :func:`staged_simhash_wide`).  ``max_hamming + 1`` must divide 120
+    :func:`simhash_table_wide`).  ``max_hamming + 1`` must divide 120
     with a chunk width that does not straddle the two columns (width
     dividing 60 — radii 1, 3, 5, 7, 9, 11 qualify)."""
     chunks = max_hamming + 1
@@ -2278,12 +1947,12 @@ def dedup_pairs_auto(
     silent log line.
 
     ``sh_rows`` optionally supplies the (id, _sh) shingle relation (e.g.
-    :func:`staged_shingle_rows` when ``df`` is file-backed) — the
+    :func:`shingle_hash_rows`, built once by the caller) — the
     estimator, the exact join, and the LSH fallback all consume the same
-    relation, so staging it removes the corpus-wide Arrow pass from
+    relation, so a persisted copy removes the corpus-wide Arrow pass from
     every branch of the decision.  When given it OVERRIDES ``k``
     entirely (advisor r6): the caller owns shingle semantics, and a
-    relation staged with a different k silently changes the Jaccard
+    relation built with a different k silently changes the Jaccard
     space — pass the k the relation was built with, or omit sh_rows."""
     base = (
         sh_rows
@@ -2473,38 +2142,6 @@ def span_anchors(
     )
 
 
-def staged_span_anchors(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """:func:`span_anchors` staged to parquet once per corpus
-    fingerprint — the anchor table is per-corpus-snapshot index state
-    (34.5M rows at sf10; rebuilding the gram strings + md5 every run
-    was the dominant cost of the first-cut q_dedup_span)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_spananch_")
-
-    def build(into: str) -> None:
-        span_anchors(df, text_col, id_col, k).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        df, out,
-        cache_prefix="span_anchors",
-        params=["span_anchors_v1", k, text_col, id_col],
-        build=build,
-        cache_root=cache_root,
-    )
-    return df.sparkSession.read.parquet(out)
-
-
 def shared_span_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -2571,9 +2208,8 @@ def shared_span_pairs(
     expansion (groups are cap-bounded, avg occupancy ~1.05, so the
     expansion is O(anchors); the count pass is map-side-combined so
     only the full-anchor join exchange moves rows), and ``anchors``
-    accepts the staged per-corpus table
-    (:func:`staged_span_anchors`) so warm runs skip the tokenize +
-    md5 narrow pass entirely — the staged_shingle_rows discipline.
+    accepts a caller-built :func:`span_anchors` table, so a caller
+    probing several ways builds the anchors once.
     """
     if anchors is None:
         anchors = span_anchors(df, text_col, id_col, k)
@@ -2695,7 +2331,7 @@ def cross_span_pairs(
     token spans ≥ ``min_tokens`` between a small BENCHMARK slice and
     the rest of the corpus — the Lee et al. 2022 contamination use of
     the suffix-array family, on the same fixed-k-gram anchor substrate
-    as :func:`shared_span_pairs` (pass the staged anchor table).
+    as :func:`shared_span_pairs` (pass a :func:`span_anchors` table).
 
     The asymmetry IS the plan: the benchmark anchor set is tiny, so it
     broadcasts — a broadcast semi-join prunes the corpus anchors to
@@ -2759,7 +2395,7 @@ def cross_span_pairs(
 def winnow_fingerprints(anchors: DataFrame, w: int = 9) -> DataFrame:
     """WINNOWING fingerprint selection (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm) over the k-gram anchor table
-    (:func:`span_anchors` / :func:`staged_span_anchors`): every window
+    (:func:`span_anchors`): every window
     of ``w`` consecutive anchors selects its minimum-hash anchor
     (ties → rightmost position, the paper's rule), giving a fingerprint
     density of ~2/(w+1) with the guarantee that any shared run of at

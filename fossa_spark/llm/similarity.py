@@ -406,57 +406,6 @@ def compact_ivf_index(spark, table_prefix: str) -> tuple[int, int]:
     return compact_bucketed_table(spark, f"{table_prefix}_cells")
 
 
-def staged_ivf_index(
-    candidates: DataFrame,
-    spark,
-    table_prefix: str,
-    work_dir: str,
-    id_col: str = "c_id",
-    vec_col: str = "c_vec",
-    n_centroids: int = 16,
-    buckets: int = 16,
-    seed: int = 42,
-    cache_root: str | None = None,
-) -> None:
-    """:func:`build_ivf_index`, staged per corpus fingerprint — the
-    stage_bucketed_tables pattern (llm/dedup.py staged_minhash_index) on
-    the retrieval index: the quantizer fit + corpus assignment happen
-    once per corpus snapshot; each run gets an immutable-cache COPY it
-    may append to freely.  Falls back to a direct build on any staging
-    failure (see fossa_spark.sources.stage_bucketed_tables for the
-    fingerprint-soundness argument)."""
-    from fossa_spark.sources import stage_bucketed_tables
-
-    # A re-stage can swap the table CONTENTS under the same prefix (new
-    # corpus fingerprint re-registers {prefix}_centroids at a different
-    # location): drop any memoized quantizer so the next probe reloads
-    # from the freshly registered table instead of silently assigning
-    # queries to cells with a stale fit (advisor r8 — build_ivf_index
-    # already does this for the direct-build path).
-    _IVF_CENTROIDS.pop((spark.sparkContext.applicationId, table_prefix), None)
-
-    def build(prefix: str, path: str) -> None:
-        build_ivf_index(
-            candidates, spark, prefix, path, id_col, vec_col, n_centroids,
-            buckets, seed,
-        )
-
-    stage_bucketed_tables(
-        candidates,
-        spark,
-        table_prefix,
-        work_dir,
-        cache_prefix="ivf_idx",
-        params=["ivf_idx_v1", IVF_INDEX_FORMAT_VERSION, n_centroids,
-                buckets, seed, id_col, vec_col],
-        tables={"cells": ("cell", "cell"), "centroids": None, "meta": None},
-        buckets=buckets,
-        build=build,
-        cache_root=cache_root,
-    )
-    _load_ivf_centroids(spark, table_prefix)  # format assertion
-
-
 def _load_ivf_centroids(spark, table_prefix: str) -> "np.ndarray":
     """Collect the coarse quantizer (n_centroids × dim — bounded by
     construction) after asserting the on-disk format version.
@@ -1357,113 +1306,3 @@ def rerank_pairs(
         .select("q_id", "c_id", "score", "rk")
     )
 
-
-def staged_brute_topk(
-    emb: DataFrame,
-    n_q: int = 20,
-    k: int = 10,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """Brute-force cosine top-k for queries vec_id < n_q, staged to
-    parquet once per corpus fingerprint (round 13, VERDICT r12 item 7):
-    the exact ranking is per-corpus-snapshot state every ranking
-    consumer (NDCG eval, ANN recall accounting) re-derives identically,
-    so it is materialized once and hard-linked per run — the
-    staged_simhash_table contract.  Only sound for an emb read directly
-    from files (fingerprint covers input files + analyzed plan)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_brutetopk_")
-
-    def build(into: str) -> None:
-        q = emb.filter(F.col("vec_id") < n_q).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        c = emb.select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-        )
-        brute_force_topk(q, c, k=k).write.mode("overwrite").parquet(into)
-
-    stage_files(
-        emb, out,
-        cache_prefix="brute_topk",
-        params=["brute_topk_v1", n_q, k],
-        build=build,
-        cache_root=cache_root,
-    )
-    return emb.sparkSession.read.parquet(out)
-
-
-def staged_kmeans_index(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-    cache_root: str | None = None,
-) -> "tuple[DataFrame, DataFrame]":
-    """The oracle-replayable IVF coarse index — fixed-point Lloyd's
-    centroids + the closing assignment (ml.kmeans_fit) — staged to
-    parquet once per corpus fingerprint (round 13): a production IVF
-    index is trained once and probed many times, so re-running the
-    k-means per query run measured 12 s of every warm q_sim_recall at
-    sf1 for bytes that never change per corpus snapshot.  Returns
-    (centroids, assignment) read back from the staged artifact."""
-    import os
-    import tempfile
-
-    from fossa_spark import ml
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_kmidx_")
-
-    def build(into: str) -> None:
-        vecs = ml.quantize_vectors(emb)
-        cents, assign = ml.kmeans_fit(vecs, k=k, iters=iters)
-        cents.write.mode("overwrite").parquet(os.path.join(into, "cents"))
-        assign.write.mode("overwrite").parquet(os.path.join(into, "assign"))
-
-    stage_files(
-        emb, out,
-        cache_prefix="kmeans_idx",
-        params=["kmeans_idx_v1", k, iters],
-        build=build,
-        cache_root=cache_root,
-    )
-    spark = emb.sparkSession
-    return (
-        spark.read.parquet(os.path.join(out, "cents")),
-        spark.read.parquet(os.path.join(out, "assign")),
-    )
-
-
-def staged_srp_sigs_md5(
-    emb: DataFrame,
-    bits: int = 4,
-    tables: int = 8,
-    dim: int = 64,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """:func:`srp_sigs_md5` staged to parquet once per corpus
-    fingerprint — the LSH signature table is per-corpus-snapshot index
-    state (and it feeds BOTH sides of the bucket self-join, which
-    otherwise recomputes the Arrow pass twice per run)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_srpsigs_")
-
-    def build(into: str) -> None:
-        srp_sigs_md5(
-            emb, "vec_id", "embedding", bits=bits, tables=tables, dim=dim
-        ).write.mode("overwrite").parquet(into)
-
-    stage_files(
-        emb, out,
-        cache_prefix="srp_sigs",
-        params=["srp_sigs_v1", bits, tables, dim],
-        build=build,
-        cache_root=cache_root,
-    )
-    return emb.sparkSession.read.parquet(out)

@@ -330,6 +330,12 @@ ACCEPTED_SMELLS: dict[str, dict[str, str]] = {
         "being evaluated; |corpus| x |queries| with constant queries is "
         "row-linear, and everything after the top-10 cut is 200 rows",
     },
+    "q_sim_recall": {
+        "cartesian": "the q_eval_ndcg shape: the brute-force ranking the "
+        "recall is measured against broadcasts the fixed query set "
+        "(vec_id < 20); |corpus| x |queries| with constant queries is "
+        "row-linear, and the recall joins run at top-k grain",
+    },
     "q_domain_kl": {
         "cartesian": "the deliberate (domain × mapped-vocab) KL grid: "
         "build side is the per-symbol corpus-count relation (≤ vocab_k "

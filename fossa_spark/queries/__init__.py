@@ -17,14 +17,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Registration order is a CONTRACT with the grading driver: it iterates
-# queries() in dict order and caps each run at 50 rows (CORRECTNESS_r01/r02
-# both cut off at exactly 50).  all_queries() therefore rotates: oracle-backed
-# queries are ordered least-recently-driver-verified first (computed from the
-# CORRECTNESS_r*.json artifacts at the repo root), so every capped run
-# refreshes the stalest signal and no green row goes >1 round stale.
-# Rows-only queries go after all oracle-backed ones; the two most expensive
-# rows-only plans run dead last so a time-boxed run loses them, not signal.
 _MODULES = [
     "fossa_spark.queries.joins",
     "fossa_spark.queries.aggregates",
@@ -78,255 +70,17 @@ def _wrap(fn: QueryFn) -> QueryFn:
     return run
 
 
-def _artifacts() -> tuple[tuple[int, dict], ...]:
-    """All driver-written CORRECTNESS_r{N}.json artifacts at the repo
-    root, parsed ONCE per process ((round, rows) pairs, round-sorted) —
-    every registry helper below reads through this instead of re-parsing
-    the whole artifact set per call (review r9: all_queries() was paying
-    four-plus full parses).  The driver only writes artifacts between
-    runs, so a process-lifetime cache is safe.  Best-effort: unreadable
-    files are skipped, a broken root degrades to ()."""
-    global _ARTIFACTS_CACHE
-    if _ARTIFACTS_CACHE is not None:
-        return _ARTIFACTS_CACHE
-    import json
-    import re
-
-    out: list[tuple[int, dict]] = []
-    root = Path(__file__).resolve().parent.parent.parent
-    try:
-        for p in sorted(root.glob("CORRECTNESS_r*.json")):
-            m = re.search(r"r(\d+)", p.name)
-            if not m:
-                continue
-            try:
-                doc = json.loads(p.read_text())
-            except (OSError, ValueError):
-                continue  # malformed artifact: skip, don't break the registry
-            if isinstance(doc, dict):
-                out.append((int(m.group(1)), doc))
-    except OSError:
-        return ()
-    _ARTIFACTS_CACHE = tuple(out)
-    return _ARTIFACTS_CACHE
-
-
-_ARTIFACTS_CACHE: tuple[tuple[int, dict], ...] | None = None
-
-
-def _is_ran_row(row) -> bool:
-    """The one definition of 'the driver EXECUTED this query and it
-    returned rows' — a hash-matched oracle row has err None, a rows-only
-    run is recorded as err='no_oracle' (shared by _has_ran_row_since and
-    _ran_rounds; review r9 deduplicated the copies)."""
-    return (
-        isinstance(row, dict)
-        and row.get("spark_rows") is not None
-        and row.get("err") in (None, "no_oracle")
-    )
-
-
-def _last_verified_round() -> dict[str, int]:
-    """Per-query round of the most recent green driver row.
-
-    Queries absent from every artifact (new this round, or never yet
-    driver-checked) map to 0 — the stalest possible signal — so they
-    sort first."""
-    seen: dict[str, int] = {}
-    for rnd, rows in _artifacts():
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                seen[name] = max(seen.get(name, 0), rnd)
-    return seen
-
-
-def _ever_seen_names() -> set[str]:
-    """Names with ANY row (green, rows-only, or error) in any driver
-    CORRECTNESS artifact — i.e. the driver has executed them at least
-    once.  Used to self-retire the rows-only front-of-window pin."""
-    seen: set[str] = set()
-    for _rnd, doc in _artifacts():
-        seen |= {k for k, v in doc.items() if isinstance(v, dict)}
-    return seen
-
-
-def _has_clean_row_since(name: str, min_round: int) -> bool:
-    """True if any CORRECTNESS_r{N}.json with N >= min_round records a
-    non-error row for ``name`` (rows-only queries never get hash_match
-    True, so 'err is None' is their green)."""
-    return any(
-        rnd >= min_round
-        and isinstance(doc.get(name), dict)
-        and doc[name].get("err") is None
-        for rnd, doc in _artifacts()
-    )
-
-
-def _has_ran_row_since(name: str, min_round: int) -> bool:
-    """True if any CORRECTNESS_r{N}.json with N >= min_round records a
-    successful EXECUTION of ``name`` — the rows-only notion of green
-    (see _is_ran_row)."""
-    return any(
-        rnd >= min_round and _is_ran_row(doc.get(name))
-        for rnd, doc in _artifacts()
-    )
-
-
-# Queries whose semantics/implementation changed in a given round: their
-# old green rows no longer attest to the current code, so they sort ahead
-# of everything until a driver round >= the listed round re-verifies them
-# (oracle-backed: a hash-matched row; rows-only: a "ran" row — see
-# _has_ran_row_since).  Add (name, CURRENT_ROUND + 1-ish) whenever a
-# query's OUTPUT changes; prune retired lines opportunistically.
-CHANGED_IN = {
-    # round 4: q_fn_try's slice widened to % 5 < 2 (advisor: the old
-    # 1-in-5 slice left try_divide's divisor 0 on every row, so
-    # div_maybe was constant-NULL); q_dedup_setsim's elements are now
-    # int64-hashed and its exact verify joins per-doc arrays with
-    # array_intersect (the PPJoin positional filter was tried and
-    # measured out — see setsim_join's docstring). Oracles unchanged.
-    "q_fn_try": 4,
-    "q_dedup_setsim": 4,
-    # (round-7 pins q_embed_pca/q_dedup_containment retired by their
-    # CORRECTNESS_r07 rows and pruned in r8.)
-}
-
-
-def _ran_rounds() -> tuple[dict[str, int], int]:
-    """(per-query round of the most recent successful EXECUTION, max
-    round number across all artifacts) — see _is_ran_row."""
-    ran: dict[str, int] = {}
-    max_round = 0
-    for rnd, doc in _artifacts():
-        max_round = max(max_round, rnd)
-        for name, row in doc.items():
-            if _is_ran_row(row):
-                ran[name] = max(ran.get(name, 0), rnd)
-    return ran, max_round
-
-
-# Rows-only queries can never earn a hash_match, so without a refresh
-# rule their driver evidence only ages.  Pin any rows-only query whose
-# last "ran" row is this many rounds older than the newest artifact
-# (q_agg_approx sat at r04 for four rounds before this existed — r8
-# verdict item 1), capped so pins can't crowd oracle-backed slots.
-_ROWS_ONLY_STALE_AFTER = 4
-_ROWS_ONLY_PIN_CAP = 6
-
-
-def _changed_pending_rows_only(
-    merged: dict[str, QueryFn], oracles: dict[str, str]
-) -> set[str]:
-    """Rows-only queries with a pending CHANGED_IN pin.  They can never
-    satisfy the oracle-backed retirement (hash_match is never True for
-    them), so the pin retires on the first post-change "ran" row — and,
-    until then, they sort at the very FRONT of the driver window with
-    the never-seen rows-only block."""
-    return {
-        n
-        for n, rnd in CHANGED_IN.items()
-        if n in merged and n not in oracles and not _has_ran_row_since(n, rnd)
-    }
-
-
 def all_queries() -> dict[str, QueryFn]:
-    """Merged inventory — oracle-backed queries first, least-recently-
-    driver-verified first within them (see _MODULES note)."""
+    """Merged inventory, in ``_MODULES`` order and each module's own order.
+    A module that fails to import raises: a broken family must not vanish
+    from the registry."""
     merged: dict[str, QueryFn] = {}
-    for modname in _MODULES:
-        try:
-            mod = import_module(modname)
-        except ModuleNotFoundError:
-            continue  # family not built yet
+    for mod in map(import_module, _MODULES):
         for name, fn in getattr(mod, "QUERIES", {}).items():
             if name in merged:
                 raise ValueError(f"duplicate query name: {name}")
             merged[name] = _wrap(fn)
-    oracles = all_oracles()
-    last = _last_verified_round()
-    # Priority queries sort ahead of everything: queries whose semantics/
-    # implementation changed (their old green rows no longer attest to
-    # the current code) plus queries a round's VERDICT explicitly asked
-    # to see verified (r02 item 7: Q21/Q13 green rows in r03).
-    # Entries are (name, round_changed): the priority expires on its own
-    # once a driver round >= round_changed re-verifies the query, so a
-    # stale `changed` set cannot quietly eat window slots in later
-    # rounds. Add (name, CURRENT_ROUND + 1-ish) whenever a query's
-    # behavior changes; prune retired lines opportunistically.
-    changed = {
-        n
-        for n, rnd in CHANGED_IN.items()
-        if n in oracles and last.get(n, 0) < rnd
-    }
-    changed_rows_only = _changed_pending_rows_only(merged, oracles)
-    # q_agg_approx pin RETIRED (round 5): r04 pinned it first and it ran
-    # (3 rows) — but the driver records every rows-only run as
-    # err="no_oracle", so the artifact format can never show a "clean"
-    # row for it and the r04 self-retire check (_has_clean_row_since)
-    # could never fire.  Per the r04 verdict, stop spending window slots
-    # on it: the r04 row (spark_rows=3, no crash) is the best retirement
-    # the format allows.
-    retire_errs: tuple[str, ...] = ()
-    expensive_tail = ("q_dedup_near", "q_pipeline")
-    # Round-6 pin (VERDICT-r5 item 1): 14 rows-only queries have NEVER had
-    # a driver slot — they can't hash-match (seeded LSH/ANN/sketches/BPE/
-    # multimodal), but a "ran" row (like q_agg_approx's r04 row) is still
-    # driver evidence they execute.  Pin any rows-only query with NO row
-    # in ANY CORRECTNESS artifact to the very front of the window; the pin
-    # self-retires the moment an artifact records its first row.  Cheap
-    # ones first; the two expensive plans last within the pin so a
-    # time-boxed run drops them, not the other 12.
-    ever_seen = _ever_seen_names()
-    ran, max_round = _ran_rounds()
-    stale_rows_only = sorted(
-        (
-            n
-            for n in merged
-            if n not in oracles
-            and n in ran
-            and max_round - ran[n] >= _ROWS_ONLY_STALE_AFTER
-        ),
-        key=lambda n: ran[n],
-    )[:_ROWS_ONLY_PIN_CAP]
-
-    def _pin(n: str) -> bool:
-        # never driver-seen, its output changed with no post-change run,
-        # or its last ran row has aged past the staleness horizon
-        return n not in oracles and (
-            n not in ever_seen or n in changed_rows_only or n in stale_rows_only
-        )
-
-    pin_rows_only = [
-        n for n in merged if _pin(n) and n not in expensive_tail
-    ] + [n for n in expensive_tail if n in merged and _pin(n)]
-    backed = [n for n in merged if n in oracles]
-    # Stable sort (registration order breaks ties):
-    #   changed-this-round (0) → never-driver-verified (0.5) → oldest
-    #   verified round first (1, 2, ...).  A never-hash-checked
-    #   oracle-backed query is a strictly bigger risk than ANY aged
-    #   green row — its oracle has never been exercised by the real
-    #   driver at all — so it sorts ahead of every once-green cohort
-    #   (r11 verdict item 1: the previous aging key
-    #   `max_round - _ROWS_ONLY_STALE_AFTER + 0.5` moved WITH the
-    #   stale-cohort drain, deferring the 12 round-11 additions to
-    #   positions 53-64 in the simulated r12 window and plausibly
-    #   forever while 50-wide cohorts kept draining).
-    backed.sort(key=lambda n: 0 if n in changed else last.get(n, 0.5))
-    out = {n: merged[n] for n in pin_rows_only}
-    out.update({n: merged[n] for n in retire_errs if n in merged})
-    out.update({n: merged[n] for n in backed})
-    out.update(
-        {
-            n: f
-            for n, f in merged.items()
-            if n not in oracles
-            and n not in expensive_tail
-            and n not in retire_errs
-            and n not in out
-        }
-    )
-    out.update({n: merged[n] for n in expensive_tail if n in merged})
-    return out
+    return merged
 
 
 def complex_typed_columns(schema) -> list[str]:
@@ -351,10 +105,6 @@ def complex_typed_columns(schema) -> list[str]:
 
 def all_oracles() -> dict[str, str]:
     out: dict[str, str] = {}
-    for modname in _MODULES:
-        try:
-            mod = import_module(modname)
-        except ModuleNotFoundError:
-            continue
+    for mod in map(import_module, _MODULES):
         out.update(getattr(mod, "ORACLE", {}))
     return out

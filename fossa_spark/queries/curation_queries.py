@@ -105,7 +105,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     at digest grain; the final left join runs at doc grain against a
     match-grain aggregate."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    anchors = D.staged_span_anchors(d, k=8)
+    anchors = D.span_anchors(d, k=8)
     spans = D.cross_span_pairs(
         anchors, F.col("rep_id") % 5 == 0, k=8, min_tokens=32, max_df=100
     )
@@ -306,7 +306,7 @@ def q_cluster_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (recursive-CTE transitive closure on the DuckDB side) — the one
     piece of the dedup path that is otherwise only pytest-verified."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    pairs = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b"
     )
     comp = D.connected_components(pairs)
@@ -325,40 +325,23 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the shuffle order, and the id range — computed from the RE-READ
     files, so the oracle cross-checks the artifact on disk against the
     same retention + placement + digest math in SQL.  Any lost,
-    duplicated, mutated, or mis-placed row moves a manifest cell.
-
-    The artifact is per-corpus-deterministic, so it is served from the
-    stage cache via hard links (round-8 review item: the first cut wrote
-    a full curated-corpus copy into a fresh temp dir every run)."""
+    duplicated, mutated, or mis-placed row moves a manifest cell."""
     import tempfile
 
-    from fossa_spark.sources import stage_files
-
     d = load(spark, sf_dir, "documents")
-    pairs = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    pairs = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b"
     )
     comp = D.connected_components(pairs)
     out_dir = tempfile.mkdtemp(prefix="fossa_shards_")
-
-    def _build(into: str) -> None:
-        C.write_training_shards(d, comp, into, n_shards=16)
-
-    stage_files(
-        d, out_dir,
-        cache_prefix="shard_full",
-        params=["shard_full_v2", 16],
-        build=_build,
-    )
+    C.write_training_shards(d, comp, out_dir, n_shards=16)
     return C.shard_manifest(spark, out_dir)
 
 
 def q_shard_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL shard append (round 8, llm/curation.py
     append_to_shards) — the daily-batch close of the loop: the corpus
-    (doc_id % 4 != 0) lives as a base shard layout (served from the
-    stage cache — per-corpus-deterministic bytes, hard-linked per run;
-    appends only ADD files, so links never reach back into the cache);
+    (doc_id % 4 != 0) lives as a base shard layout written per run;
     the arriving batch (doc_id % 4 == 0, plus planted exact copies of
     corpus docs with doc_id % 16 == 1 under +10_000_000 ids) probes the
     persisted exact digest index, and only the NOVEL docs are placed —
@@ -389,21 +372,7 @@ def q_shard_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     empty_comp = spark.createDataFrame([], "doc_id long, component long")
     shard_dir = tempfile.mkdtemp(prefix="fossa_shard_base_")
-
-    def _build_base(into: str) -> None:
-        # the base manifest is materialized as part of the build (the
-        # write happens inside write_training_shards); only the files
-        # matter for the cache
-        C.write_training_shards(corpus, empty_comp, into, n_shards=16)
-
-    from fossa_spark.sources import stage_files
-
-    stage_files(
-        d, shard_dir,
-        cache_prefix="shard_base",
-        params=["shard_base_v2", 16],  # v2: shard=N/batch=base layout
-        build=_build_base,
-    )
+    C.write_training_shards(corpus, empty_comp, shard_dir, n_shards=16)
     return C.append_to_shards(batch, keep, shard_dir, n_shards=16)
 
 
@@ -420,10 +389,7 @@ def q_shard_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     order damage (``first_doc`` keys on it) — hash-mismatches.  File-count
     reduction is pinned in tests/test_curation.py.
 
-    Compaction MUTATES its layout, so the base is a fresh per-run
-    hard-link serve from the stage cache (links share inodes, not
-    directory entries: renaming/deleting the work-dir tree never reaches
-    back into the cache)."""
+    Compaction MUTATES its layout, so the base is written fresh per run."""
     import hashlib
     import tempfile
 
@@ -444,18 +410,7 @@ def q_shard_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     empty_comp = spark.createDataFrame([], "doc_id long, component long")
     shard_dir = tempfile.mkdtemp(prefix="fossa_shard_cpt_")
-
-    def _build_base(into: str) -> None:
-        C.write_training_shards(corpus, empty_comp, into, n_shards=16)
-
-    from fossa_spark.sources import stage_files
-
-    stage_files(
-        d, shard_dir,
-        cache_prefix="shard_base",
-        params=["shard_base_v2", 16],  # shares q_shard_delta's cache entry
-        build=_build_base,
-    )
+    C.write_training_shards(corpus, empty_comp, shard_dir, n_shards=16)
     C.append_to_shards(batch, keep, shard_dir, n_shards=16)
     C.compact_shards(spark, shard_dir)
     return C.shard_manifest(spark, shard_dir)
@@ -479,18 +434,7 @@ def q_shard_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     empty_comp = spark.createDataFrame([], "doc_id long, component long")
     shard_dir = tempfile.mkdtemp(prefix="fossa_shard_epoch_")
-
-    def _build_base(into: str) -> None:
-        C.write_training_shards(corpus, empty_comp, into, n_shards=16)
-
-    from fossa_spark.sources import stage_files
-
-    stage_files(
-        d, shard_dir,
-        cache_prefix="shard_base",
-        params=["shard_base_v2", 16],  # shares the q_shard_delta cache entry
-        build=_build_base,
-    )
+    C.write_training_shards(corpus, empty_comp, shard_dir, n_shards=16)
     return (
         C.shard_epoch_order(spark, shard_dir, start_pos=0, end_pos=3)
         .select("shard", F.col("pos").cast("long").alias("pos"),
@@ -509,7 +453,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     auditable/deterministic as q_split_train's. Per-fold audit row:
     docs, distinct groups, id range."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    pairs = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b"
     )
     comp = D.connected_components(pairs)
@@ -778,7 +722,7 @@ def q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication matrix: the verified near-dup pair
-    relation (staged word-5-gram Jaccard ≥ 0.5 — the q_dedup_ngram /
+    relation (word-5-gram Jaccard ≥ 0.5 — the q_dedup_ngram /
     q_cluster_keep input) grouped by the UNORDERED source pair of its
     endpoints — "which sources duplicate each other", the provenance
     table that decides whether to dedup within or across crawls.
@@ -786,7 +730,7 @@ def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     two broadcast id-joins attach sources; least/greatest normalizes
     the pair so the matrix is upper-triangular."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    pairs = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b"
     )
     sa = d.select(F.col("doc_id").alias("id_a"), F.col("source").alias("_sa"))

@@ -471,21 +471,23 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orders_version_chain(base: DataFrame, into: str, *,
+def _orders_version_chain(spark: SparkSession, sf_dir: str, *,
                           vacuum: bool) -> str:
     """Build THE deterministic three-commit version chain every
-    versioned-table query shares (one definition — review r10: three
-    copy-pasted builders sharing a stage-cache key was a stale-cache
-    poisoning hazard): v1 inserts keys ≡0 (mod 3); v2 inserts ≡1,
+    versioned-table query shares (one definition, review r10) over
+    orders, in a fresh temp dir: v1 inserts keys ≡0 (mod 3); v2 inserts ≡1,
     re-upserts ≡0 (mod 9, excluding ≡0 mod 12) with o_custkey+1e6, and
     deletes ≡0 (mod 12); v3 inserts ≡2 and deletes ≡6 (mod 15). A
     checkpoint lands at v2; ``vacuum`` additionally drops the folded
-    history. Returns the table path under ``into``."""
+    history. Returns the table path."""
     import os
 
     from fossa_spark import versioned as V
 
-    tbl = os.path.join(into, "tbl")
+    base = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus"
+    )
+    tbl = os.path.join(tempfile.mkdtemp(prefix="fossa_vchain_"), "tbl")
     k = F.col("o_orderkey")
     up = F.lit(V.UPSERT)
     V.init_table(tbl, key=["o_orderkey"])
@@ -507,7 +509,6 @@ def _orders_version_chain(base: DataFrame, into: str, *,
             base.filter(k % 15 == 6).withColumn(V.OP_COL, F.lit(V.DELETE))
         )
     )
-    spark = base.sparkSession
     V.commit(tbl, v1, expect_version=0)
     V.commit(tbl, v2, expect_version=1)
     V.commit(tbl, v3, expect_version=2)
@@ -515,29 +516,6 @@ def _orders_version_chain(base: DataFrame, into: str, *,
     if vacuum:
         V.vacuum(tbl)
     return tbl
-
-
-def _staged_version_chain(spark: SparkSession, sf_dir: str, *,
-                          vacuum: bool) -> str:
-    """The chain above, served from the stage cache (per-corpus
-    deterministic bytes). The cache key includes the vacuum flag AND a
-    build-recipe version, so editing the builder can never leave one
-    consumer reading another's stale artifact."""
-    import os
-    import tempfile as _tf
-
-    from fossa_spark.sources import stage_files
-
-    o = load(spark, sf_dir, "orders")
-    base = o.select("o_orderkey", "o_custkey", "o_orderstatus")
-    out_dir = _tf.mkdtemp(prefix="fossa_vchain_")
-    stage_files(
-        base, out_dir,
-        cache_prefix="vchain",
-        params=["vchain_v1", bool(vacuum)],
-        build=lambda into: _orders_version_chain(base, into, vacuum=vacuum),
-    )
-    return os.path.join(out_dir, "tbl")
 
 
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,11 +528,10 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v= directory column). Returns the per-status audit of BOTH versions;
     the oracle re-derives each version's exact membership and payload
     state from orders, so a fold slip, a lost tombstone, or a
-    vacuum-destroyed row moves a cell. The artifact is per-corpus
-    deterministic and served from the stage cache."""
+    vacuum-destroyed row moves a cell."""
     from fossa_spark import versioned as V
 
-    tbl = _staged_version_chain(spark, sf_dir, vacuum=True)
+    tbl = _orders_version_chain(spark, sf_dir, vacuum=True)
 
     def audit(v: int) -> DataFrame:
         return (
@@ -584,11 +561,11 @@ def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of(1) and as-of(4): the oracle derives the v1 state from orders
     ONCE and expects it under both version labels, so any key the
     rollback missed, resurrected, or double-restored moves a cell.
-    The staged chain is hard-linked per run, so the restore commit
-    mutates only this run's copy (never the stage cache)."""
+    The chain is built per run, so the restore commit mutates only this
+    run's copy."""
     from fossa_spark import versioned as V
 
-    tbl = _staged_version_chain(spark, sf_dir, vacuum=False)
+    tbl = _orders_version_chain(spark, sf_dir, vacuum=False)
     v_new = V.restore(spark, tbl, 1)
 
     def audit(v: int) -> DataFrame:
@@ -624,7 +601,7 @@ def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     states set-theoretically from orders."""
     from fossa_spark import versioned as V
 
-    tbl = _staged_version_chain(spark, sf_dir, vacuum=False)
+    tbl = _orders_version_chain(spark, sf_dir, vacuum=False)
     feed = V.change_feed(spark, tbl, 1, 3)
     return (
         feed.groupBy("change", "o_orderstatus")
@@ -655,45 +632,36 @@ def q_evolve_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orders; a lost backfill, dropped tombstone, or mis-folded
     evolved row moves a cell."""
     import os as _os
-    import tempfile as _tf
 
     from fossa_spark import versioned as V
-    from fossa_spark.sources import stage_files
 
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
     k = F.col("o_orderkey")
     up = F.lit(V.UPSERT)
-
-    def _build(into: str) -> None:
-        tbl = _os.path.join(into, "tbl")
-        V.init_table(tbl, key=["o_orderkey"])
-        V.commit(tbl, base.filter(k % 3 == 0).withColumn(V.OP_COL, up),
-                 expect_version=0)
-        V.checkpoint(spark, tbl, 1)  # pre-evolution checkpoint
-        v2 = (
-            base.filter(k % 3 == 1)
-            .withColumn("prio", k % 97)
+    tbl = _os.path.join(tempfile.mkdtemp(prefix="fossa_vevolve_"), "tbl")
+    V.init_table(tbl, key=["o_orderkey"])
+    V.commit(tbl, base.filter(k % 3 == 0).withColumn(V.OP_COL, up),
+             expect_version=0)
+    V.checkpoint(spark, tbl, 1)  # pre-evolution checkpoint
+    v2 = (
+        base.filter(k % 3 == 1)
+        .withColumn("prio", k % 97)
+        .withColumn(V.OP_COL, up)
+        .unionByName(
+            base.filter(k % 12 == 6)
+            .withColumn("o_custkey", F.col("o_custkey") + 1_000_000)
+            .withColumn("prio", k % 97 + 1000)
             .withColumn(V.OP_COL, up)
-            .unionByName(
-                base.filter(k % 12 == 6)
-                .withColumn("o_custkey", F.col("o_custkey") + 1_000_000)
-                .withColumn("prio", k % 97 + 1000)
-                .withColumn(V.OP_COL, up)
-            )
-            .unionByName(
-                base.filter(k % 12 == 0)
-                .withColumn("prio", F.lit(None).cast("long"))
-                .withColumn(V.OP_COL, F.lit(V.DELETE))
-            )
         )
-        V.commit(tbl, v2, expect_version=1)
-
-    out_dir = _tf.mkdtemp(prefix="fossa_vevolve_")
-    stage_files(base, out_dir, cache_prefix="vchain_evolve",
-                params=["vchain_evolve_v1"], build=_build)
-    tbl = _os.path.join(out_dir, "tbl")
+        .unionByName(
+            base.filter(k % 12 == 0)
+            .withColumn("prio", F.lit(None).cast("long"))
+            .withColumn(V.OP_COL, F.lit(V.DELETE))
+        )
+    )
+    V.commit(tbl, v2, expect_version=1)
 
     def audit(v: int) -> DataFrame:
         return (
@@ -733,33 +701,24 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold + one key-only membership join + an O(source) commit — the
     same table-side cost Delta's MERGE pays in its rewrite step."""
     import os as _os
-    import tempfile as _tf
 
     from fossa_spark import versioned as V
-    from fossa_spark.sources import stage_files
 
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
     k = F.col("o_orderkey")
-
-    def _build(into: str) -> None:
-        tbl = _os.path.join(into, "tbl")
-        V.init_table(tbl, key=["o_orderkey"])
-        V.commit(
-            tbl,
-            base.filter(k % 3 == 0).withColumn(V.OP_COL, F.lit(V.UPSERT)),
-            expect_version=0,
-        )
-        src = base.filter(k % 2 == 0).withColumn(
-            "o_custkey", F.col("o_custkey") + 500_000
-        )
-        V.merge_into(spark, tbl, src, delete_condition=(k % 10 == 0))
-
-    out_dir = _tf.mkdtemp(prefix="fossa_vmerge_")
-    stage_files(base, out_dir, cache_prefix="vchain_merge",
-                params=["vchain_merge_v1"], build=_build)
-    tbl = _os.path.join(out_dir, "tbl")
+    tbl = _os.path.join(tempfile.mkdtemp(prefix="fossa_vmerge_"), "tbl")
+    V.init_table(tbl, key=["o_orderkey"])
+    V.commit(
+        tbl,
+        base.filter(k % 3 == 0).withColumn(V.OP_COL, F.lit(V.UPSERT)),
+        expect_version=0,
+    )
+    src = base.filter(k % 2 == 0).withColumn(
+        "o_custkey", F.col("o_custkey") + 500_000
+    )
+    V.merge_into(spark, tbl, src, delete_condition=(k % 10 == 0))
     feed = V.change_feed(spark, tbl, 1, 2)
     return (
         feed.groupBy("change", "o_orderstatus")
@@ -782,11 +741,11 @@ def q_clone_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     source cells must equal the unforked q_time_travel v3 state (a
     clone that leaked its divergent commit back moves them) and the
     clone cells must reflect exactly the extra tombstones (a fork that
-    lost shared history moves those).  The staged chain is hard-linked
-    per run, so the fork mutates only this run's copy."""
+    lost shared history moves those).  The chain is built per run, so
+    the fork mutates only this run's copy."""
     from fossa_spark import versioned as V
 
-    tbl = _staged_version_chain(spark, sf_dir, vacuum=False)
+    tbl = _orders_version_chain(spark, sf_dir, vacuum=False)
     fork = tbl + "_fork"
     V.clone_table(tbl, fork)
     base = load(spark, sf_dir, "orders").select(
@@ -831,10 +790,10 @@ def q_view_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of(v3), which is exactly what the oracle computes
     set-theoretically from orders. An O(changes) refresh replacing an
     O(table) rescan: the feed is the only corpus-sized input after the
-    seed. Reuses the shared staged chain (vacuum=False)."""
+    seed. Reuses the shared chain (vacuum=False)."""
     from fossa_spark import versioned as V
 
-    tbl = _staged_version_chain(spark, sf_dir, vacuum=False)
+    tbl = _orders_version_chain(spark, sf_dir, vacuum=False)
 
     seed = (
         V.read_as_of(spark, tbl, 1)

@@ -29,9 +29,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(8 bands × 2) + exact-Jaccard verify ≥ 0.5.
     Seeded hashing → stable rows-only check."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_dedup(
-        d, threshold=0.5, sh_rows=D.staged_shingle_rows(d, k=5)
-    )
+    pairs = D.minhash_lsh_dedup(d, threshold=0.5)
     return pairs.select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     ).orderBy("id_a", "id_b")
@@ -43,14 +41,14 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 100) bounding the self-join's per-shingle fan-in at corpus scale;
     the oracle applies the identical cap."""
     d = load(spark, sf_dir, "documents")
-    return D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).orderBy(
+    return D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).orderBy(
         "id_a", "id_b"
     )
 
 
 def q_dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-signal dedup audit: every verified LEXICAL near-dup pair
-    (word-5-gram Jaccard ≥ 0.5 — the same staged pair relation
+    (word-5-gram Jaccard ≥ 0.5 — the same pair relation
     q_dedup_ngram / q_cluster_keep consume) annotated with the pair's
     EXACT embedding cosine and a semantic_agree flag (cosine ≥ 0.5) —
     the curation decision table for "which lexical dups does the
@@ -62,7 +60,7 @@ def q_dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fold-order identical, rounded 6 dp)."""
     d = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
-    pairs = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    pairs = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b", "jaccard"
     )
     ea = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
@@ -85,10 +83,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     df ≤ 100 fan-in bound as q_dedup_ngram; the ratio is one int/int
     division, bit-identical in both engines."""
     d = load(spark, sf_dir, "documents")
-    return D.containment_pairs(
-        d, k=5, min_overlap=0.6, max_df=100,
-        sh_rows=D.staged_shingle_rows(d, k=5),
-    ).orderBy(
+    return D.containment_pairs(d, k=5, min_overlap=0.6, max_df=100).orderBy(
         "id_a", "id_b"
     )
 
@@ -126,13 +121,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs form over DISTINCT signatures — pigeonhole guarantees
     the banded join finds EXACTLY the sig pairs within the radius, so
     both forms are the same relation; the two-step canon selection
-    (MIN group id, then that id's hamming) is mirrored verbatim.  The
-    signature table is staged per corpus fingerprint (the
-    120-aggregate pass is per-corpus-snapshot state)."""
+    (MIN group id, then that id's hamming) is mirrored verbatim."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    return D.simhash_dedup(
-        d, max_hamming=3, sigs=D.staged_simhash_wide(d)
-    ).orderBy("doc_id")
+    return D.simhash_dedup(d, max_hamming=3).orderBy("doc_id")
 
 
 def q_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,10 +141,9 @@ def q_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale argument; the oracle replays anchor → cap → join → island →
     span verbatim on the same hash."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    return D.shared_span_pairs(
-        d, k=8, min_tokens=16, max_df=100,
-        anchors=D.staged_span_anchors(d, k=8),
-    ).orderBy("id_a", "id_b", "start_a", "start_b")
+    return D.shared_span_pairs(d, k=8, min_tokens=16, max_df=100).orderBy(
+        "id_a", "id_b", "start_a", "start_b"
+    )
 
 
 def _simhash_oracle(max_hamming: int = 3) -> str:
@@ -225,11 +215,11 @@ def q_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-(degree, id) endpoint, out-degree O(√m) on any graph) — the
     skew refinement q_triangles' id-ordered census defers; per-node
     counts come free because each triangle is materialized exactly
-    once.  Edge substrate = staged_ngram_pairs (the q_dedup_ngram
+    once.  Edge substrate = ngram_jaccard_pairs (the q_dedup_ngram
     relation, df ≤ 100 capped); the oracle replays pairs + orientation
     + wedge-close joins."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    pairs = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b"
     )
     return G.triangles(pairs).orderBy("node")
@@ -283,10 +273,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index build is idempotent per (session, sf): the operational shape
     is build-once / probe-per-batch, so repeat runs (bench warm pass, the
     driver's second execution) skip straight to the probe — exactly what a
-    daily-batch job does against yesterday's index.  Round 7: the
-    first-in-session build serves from the cross-session stage cache
-    (staged_minhash_index), so even the cold pass pays a file copy, not
-    the corpus-wide signature build."""
+    daily-batch job does against yesterday's index."""
     import hashlib
     import tempfile
 
@@ -300,7 +287,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = f"fs_dedup_idx_v{D.INDEX_FORMAT_VERSION}_{tag}"
     if not spark.catalog.tableExists(f"{prefix}_bands"):
         path = tempfile.mkdtemp(prefix="fossa_dedup_idx_")
-        D.staged_minhash_index(corpus, spark, prefix, path)
+        D.build_minhash_index(corpus, prefix, path)
     out = D.incremental_dedup(batch, spark, prefix, threshold=0.5)
     return out.orderBy("doc_id")
 
@@ -355,23 +342,18 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite hash-mismatches.  File-count reduction and plan
     invariance are pinned in tests/test_llm.py.
 
-    The index MUTATES here (append + compact), so every run works on its
-    own copy and drops it in a finally block — but the day-0 BUILD is a
-    pure function of the corpus slice, so the copy is served from the
-    stage cache (staged_exact_index hard-links the immutable cached
-    files into a per-run work_dir; appends and the compaction swap only
-    ever touch the run-local directory entries, never the cached
-    inodes)."""
+    The index MUTATES here (append + compact), so every run builds its
+    own copy and drops it in a finally block."""
     import hashlib
     import shutil
     import tempfile
 
     d = load(spark, sf_dir, "documents")
     path = tempfile.mkdtemp(prefix="fossa_cidx_")
-    prefix = f"fs_cidx_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+    table = f"fs_cidx_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_digest"
     try:
-        table = D.staged_exact_index(
-            d.filter(F.col("doc_id") % 4 == 1), spark, prefix, path
+        D.build_exact_index(
+            d.filter(F.col("doc_id") % 4 == 1), spark, table, f"{path}/digest"
         )
         for day in (2, 3):
             D.append_to_exact_index(
@@ -387,8 +369,7 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch.unionByName(planted), spark, table
         ).localCheckpoint(eager=True)
     finally:
-        for sub in ("digest", "meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{sub}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(path, ignore_errors=True)
     return out.orderBy("doc_id")
 
@@ -409,38 +390,9 @@ def q_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned above chance in tests/test_llm.py); the learnable direction
     comes from the mean-centered token-count feature (classifier.py
     hashed_features explains why raw counts alone stall at the
-    majority class).
-
-    The trained model (weights + centering constant) is a deterministic
-    pure function of (corpus, hyperparams) — integers all the way down —
-    so it is served from the stage cache per corpus fingerprint (the
-    q_shard_manifest convention): later runs pay only the scoring pass,
-    and the oracle still re-derives the FULL training, so a stale or
-    corrupted cached model hash-mismatches.  Training itself stays
-    exercised by pytest (accuracy + rerun-determinism pins)."""
-    import os
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
+    majority class)."""
     d = load(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="fossa_qlr_")
-
-    def _build(into: str) -> None:
-        w, mt = CL.train_quality_lr(d, label=(F.col("n_chars") >= 300), iters=3)
-        w.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "w"))
-        mt.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "m"))
-
-    stage_files(d, work, cache_prefix="quality_lr",
-                params=["quality_lr_v1", 3, 256, 300], build=_build)
-    w = spark.read.parquet(os.path.join(work, "w"))
-    # re-aggregate the 1-row centering relation into a zero-key aggregate
-    # so the crossJoin(broadcast(·)) inside scoring stays PLAN-PROVABLY
-    # scalar (a bare 1-row parquet scan is not — the scale_smells BNLJ
-    # check would flag it)
-    mt = spark.read.parquet(os.path.join(work, "m")).agg(
-        F.min("mt").alias("mt")
-    )
+    w, mt = CL.train_quality_lr(d, label=(F.col("n_chars") >= 300), iters=3)
     scored = CL.score_quality_lr(d, w, mt)
     return (
         scored.join(
@@ -460,11 +412,17 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-consumer relation: persist so each downstream pass reads
     # cached blocks instead of replaying the scan + spread() (round 14)
     e = spread(load(spark, sf_dir, "embeddings"), spark).persist()
-    q = e.filter(F.col("vec_id") < 5).select(
+    return _brute_topk(e, n_q=5, k=5).orderBy("q_id", "rk")
+
+
+def _brute_topk(e: DataFrame, n_q: int, k: int) -> DataFrame:
+    """Exact cosine top-k of queries ``vec_id < n_q`` against the whole
+    embeddings table (S.brute_force_topk): (q_id, c_id, score, rk)."""
+    q = e.filter(F.col("vec_id") < n_q).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    return S.brute_force_topk(q, c, k=5).orderBy("q_id", "rk")
+    return S.brute_force_topk(q, c, k=k)
 
 
 import math as _math
@@ -490,11 +448,9 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     so DCG and IDCG are exact bigint sums; IDCG uses the true ideal
     (min(label size − 1, 10) top slots all relevant); the single
     double division happens at the end (NULL when a label is a
-    singleton).  Scale shape (round 13, VERDICT r12 item 7): the exact
-    ranking rides the staged per-corpus-snapshot artifact
-    (S.staged_brute_topk, shared with q_sim_recall) — the brute-force
-    pass is paid once per corpus fingerprint instead of per eval run;
-    everything downstream is 200 rows.  Output and oracle unchanged."""
+    singleton).  Scale shape: the exact ranking is one broadcast-query
+    brute-force pass (_brute_topk, shared with q_sim_recall);
+    everything downstream is 200 rows."""
     # multi-consumer relation: persist so each downstream pass reads
     # cached blocks instead of replaying the scan + spread() (round 14)
     e = spread(load(spark, sf_dir, "embeddings"), spark).persist()
@@ -502,7 +458,7 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),
     )
-    top = S.staged_brute_topk(e, n_q=20, k=_NDCG_K)
+    top = _brute_topk(e, n_q=20, k=_NDCG_K)
     clab = e.select(
         F.col("vec_id").alias("c_id"), F.col("label").alias("c_label")
     )
@@ -693,7 +649,7 @@ def q_sim_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
     prefix = f"fs_ivf_idx_{uuid.uuid4().hex[:8]}"
     work_dir = tempfile.mkdtemp(prefix="fossa_ivf_idx_")
-    S.staged_ivf_index(c, spark, prefix, work_dir, n_centroids=16)
+    S.build_ivf_index(c, spark, prefix, work_dir, n_centroids=16)
     # 5-query probes against a 16-bucket index under corpus-scale shuffle
     # width is pure task overhead — the q_stream_dedup_exec house pattern
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -762,7 +718,7 @@ def q_sim_index_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     prefix = f"fs_ivfx_v{S.IVF_INDEX_FORMAT_VERSION}_{tag}"
     if not spark.catalog.tableExists(f"{prefix}_cells"):
-        S.staged_ivf_index(
+        S.build_ivf_index(
             c, spark, prefix, tempfile.mkdtemp(prefix="fossa_ivfx_"),
             n_centroids=16,
         )
@@ -819,8 +775,8 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
       (table, bucket); same re-rank.
 
     The recall join itself is the measurement: hits = |ANN top-10 ∩
-    brute top-10| per query.  The brute ranking rides the staged
-    per-corpus artifact (S.staged_brute_topk) shared with q_eval_ndcg.
+    brute top-10| per query.  The brute ranking is _brute_topk, shared
+    with q_eval_ndcg.
     Scale shape: both candidate generators are the bounded-bucket
     plans of their production twins; the re-rank and recall joins run
     at candidate/top-k grain, never corpus²."""
@@ -832,37 +788,17 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the re-rank — persist so each consumer reads blocks instead of
     # replaying the scan + spread() shuffle (round 14)
     e = spread(load(spark, sf_dir, "embeddings"), spark).persist()
-    # Round 15 (guide §2.6 — with the stage cache scoped per process,
-    # the three index artifacts build in the timed path of the first
-    # run): the brute ranking, the IVF index and the SRP signature
-    # table are INDEPENDENT builds over the same persisted relation, so
-    # build them as concurrent jobs instead of three sequential build
-    # waves.  Cache-hit runs serve in milliseconds either way.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _f_brute = _pool.submit(
-            S.staged_brute_topk, e, n_q=_RECALL_NQ, k=_RECALL_K
-        )
-        _f_km = _pool.submit(
-            S.staged_kmeans_index, e, k=_RECALL_IVF_CELLS,
-            iters=_RECALL_IVF_ITERS,
-        )
-        _f_srp = _pool.submit(
-            S.staged_srp_sigs_md5, e, bits=_RECALL_BITS,
-            tables=_RECALL_TABLES, dim=_RECALL_DIM,
-        )
-        brute = _f_brute.result().select("q_id", "c_id")
-        cents, assign = _f_km.result()
-        _srp_sigs = _f_srp.result()
+    brute = _brute_topk(e, n_q=_RECALL_NQ, k=_RECALL_K).select("q_id", "c_id")
     qids = e.filter(F.col("vec_id") < _RECALL_NQ).select(
         F.col("vec_id").alias("q_id")
     )
 
     # --- IVF leg: oracle-replayable coarse quantizer + nprobe probe.
-    # Centroids + assignment are INDEX state (train once, probe many):
-    # staged per corpus fingerprint, like a production IVF build.
+    # Centroids + assignment are INDEX state (train once, probe many).
     vecs = ml.quantize_vectors(e)
+    cents, assign = ml.kmeans_fit(
+        vecs, k=_RECALL_IVF_CELLS, iters=_RECALL_IVF_ITERS
+    )
     qe = vecs.filter(F.col("vec_id") < _RECALL_NQ).select(
         F.col("vec_id").alias("q_id"), F.posexplode("qv").alias("pos", "qval")
     )
@@ -892,10 +828,10 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- SRP-LSH leg: md5-literal hyperplanes, shared-bucket candidates.
-    # The signature table is index state too (and feeds both sides of
-    # the bucket self-join): staged per corpus fingerprint (built
-    # concurrently with the other two artifacts above).
-    sigs = _srp_sigs
+    sigs = S.srp_sigs_md5(
+        e, "vec_id", "embedding", bits=_RECALL_BITS, tables=_RECALL_TABLES,
+        dim=_RECALL_DIM,
+    )
     qs = sigs.filter(F.col("vec_id") < _RECALL_NQ).select(
         F.col("vec_id").alias("q_id"), "tbl", "sig"
     )
@@ -1213,8 +1149,8 @@ def q_contamination_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     the training remainder.  The word-3-gram scan (q_contamination)
     flags ANY shared phrase; this is the memorization-grade signal — a
     contiguous quotation long enough to matter.  Plan: the benchmark
-    anchor set broadcasts; the corpus anchor table (staged, shared with
-    q_dedup_span) is pruned map-side to benchmark-colliding hashes
+    anchor set broadcasts; the corpus anchor table (the q_dedup_span
+    substrate) is pruned map-side to benchmark-colliding hashes
     before any shuffle, so the corpus never exchanges (see
     llm/dedup.py cross_span_pairs).  Scope (ADVICE r13): the scan runs
     at distinct-text-representative grain, so a training doc that is an
@@ -1224,7 +1160,7 @@ def q_contamination_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact dedup cannot see.  Oracle replays anchors → prune →
     cap → join → islands verbatim."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    anchors = D.staged_span_anchors(d, k=8)
+    anchors = D.span_anchors(d, k=8)
     return D.cross_span_pairs(
         anchors, F.col("rep_id") % 5 == 0, k=8, min_tokens=16, max_df=100
     ).orderBy("bench_id", "train_id", "start_bench", "start_train")
@@ -1232,7 +1168,7 @@ def q_contamination_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al. SIGMOD 2003 —
-    the MOSS selection) over the staged anchor substrate shared with
+    the MOSS selection) over the anchor substrate shared with
     q_dedup_span: per distinct-text document, the selected-fingerprint
     count, density (≈ 2/(w+1)), and an md5 digest of the selected
     (pos:hash) sequence — the sampled index a 100 TB pipeline stores
@@ -1242,7 +1178,7 @@ def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the struct-min window selection, the rightmost-position
     tie-break, and the short-document global-min rule verbatim."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    anchors = D.staged_span_anchors(d, k=8)
+    anchors = D.span_anchors(d, k=8)
     fp = D.winnow_fingerprints(anchors, w=9)
     n_anchors = anchors.groupBy("rep_id").agg(
         F.count(F.lit(1)).alias("n_anchors")
@@ -1295,7 +1231,7 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair relations of their parent queries (hot-shingle cap / banded
     buckets); the recall join runs at pair grain."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    truth = D.staged_ngram_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
+    truth = D.ngram_jaccard_pairs(d, k=5, min_jaccard=0.5, max_df=100).select(
         "id_a", "id_b", "jaccard"
     )
     sh_rows = d.select(
@@ -1344,10 +1280,7 @@ def q_dedup_span_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     span chain, then the splice at token grain (position ∈ interval
     EXISTS, string_agg ORDER BY position)."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    out = D.remove_shared_spans(
-        d, k=8, min_tokens=16, max_df=100,
-        anchors=D.staged_span_anchors(d, k=8),
-    )
+    out = D.remove_shared_spans(d, k=8, min_tokens=16, max_df=100)
     return out.select(
         F.col("rep_id").alias("doc_id"),
         "n_tokens",
@@ -1374,7 +1307,7 @@ def q_dedup_span_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hot-hash cap before any pair), truth is computed only for the
     accounting, the recall join runs at span grain."""
     d = spread(load(spark, sf_dir, "documents"), spark)
-    anchors = D.staged_span_anchors(d, k=8)
+    anchors = D.span_anchors(d, k=8)
     truth = D.shared_span_pairs(
         d, k=8, min_tokens=16, max_df=100, anchors=anchors
     )
@@ -1660,10 +1593,10 @@ def q_dedup_setsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — no shingle strings), finishing the dedup family's HOF
     retirement; outputs are counts, so the hash-family swap is
     value-invariant (hash-parity re-checked at sf0.01 + sf0.1).
-    Round 6 NEGATIVE RESULT: staging this k=3 relation (the k=5
-    staged_shingle_rows pattern) was tried and MEASURED OUT — setsim's
+    Round 6 NEGATIVE RESULT: writing this k=3 relation to parquet once
+    and reading it back was tried and MEASURED OUT — setsim's
     engine reads the token relation through ~5 subtrees that
-    ReusedExchange collapses when inline, but a staged-parquet input is
+    ReusedExchange collapses when inline, but a parquet-backed input is
     rescanned per subtree (sf1 warm 5.6 → 13.2 s).  Keep it inline."""
     d = load(spark, sf_dir, "documents")
     rows = D.shingle_hash_rows(d, "text", "doc_id", k=3).select(
@@ -1681,17 +1614,9 @@ def q_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturated corpora (setsim_join's measured sf10 boundary, made into
     an operator).  At every verification scale the fixture is linear, so
     the choice is deterministically 'exact_prefix' and the brute-force
-    SQL oracle covers the whole output including the strategy column.
-
-    Round 8: the shingle relation is staged (staged_shingle_rows, k=3 —
-    built with the same k it overrides, per the sh_rows contract): the
-    estimator and every branch of the decision consume it ~4×, and the
-    unstaged Arrow pass was recomputed each time (~6 s isolated → ~3 s).
-    """
+    SQL oracle covers the whole output including the strategy column."""
     d = load(spark, sf_dir, "documents")
-    return D.dedup_pairs_auto(
-        d, threshold=0.5, k=3, sh_rows=D.staged_shingle_rows(d, k=3)
-    ).orderBy("id_a", "id_b")
+    return D.dedup_pairs_auto(d, threshold=0.5, k=3).orderBy("id_a", "id_b")
 
 
 _BPE_MERGE_CACHE: dict = {}
@@ -2756,7 +2681,7 @@ ORACLE = {
     """,
     # q_dedup_ngram's CTE chain + per-pair exact cosine via the q_sim_topk
     # _DOT convention — the lexical pair relation is identical, so the
-    # jaccard column re-proves staged_ngram_pairs and the cosine column
+    # jaccard column re-proves ngram_jaccard_pairs and the cosine column
     # proves the embedding annotation join
     "q_dedup_consensus": f"""
         WITH toks AS (
@@ -3622,28 +3547,10 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle wraps q_quality_model's FULL unrolled-GD derivation, so a
     drift anywhere in training, scoring, clamping, or ranking moves the
     statistic."""
-    import os
-    import tempfile
-
     from pyspark.sql.window import Window as W
 
-    from fossa_spark.sources import stage_files
-
     d = load(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="fossa_qlr_auc_")
-
-    def _build(into: str) -> None:
-        w, mt = CL.train_quality_lr(d, label=(F.col("n_chars") >= 300), iters=3)
-        w.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "w"))
-        mt.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "m"))
-
-    # same cache key as q_quality_model: one shared trained model
-    stage_files(d, work, cache_prefix="quality_lr",
-                params=["quality_lr_v1", 3, 256, 300], build=_build)
-    w = spark.read.parquet(os.path.join(work, "w"))
-    mt = spark.read.parquet(os.path.join(work, "m")).agg(
-        F.min("mt").alias("mt")
-    )
+    w, mt = CL.train_quality_lr(d, label=(F.col("n_chars") >= 300), iters=3)
     sl = (
         CL.score_quality_lr(d, w, mt)
         .join(

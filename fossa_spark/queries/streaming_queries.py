@@ -357,36 +357,6 @@ def _feed_writer(feed: str):
     return write
 
 
-def _staged_feed(src: DataFrame, feed: str, cache_prefix: str, build) -> None:
-    """Serve a DETERMINISTIC micro-batch feed from the stage cache
-    (round 8): the feed bytes are a pure function of the fixture, yet
-    every run was re-reading the source and re-writing the files (~1-2 s
-    per feed).  ``build(into)`` writes the feed files into ``into``;
-    serves COPY (not link — the mtime re-stamp below must not reach back
-    into the cached inodes) and then re-stamp mtimes in preserved build
-    order, since the file stream source triggers micro-batches in
-    modification-time order and several queries' cross-batch premises
-    depend on it."""
-    import time as _time
-
-    from fossa_spark.sources import stage_files
-
-    stage_files(
-        src, feed,
-        cache_prefix=cache_prefix,
-        params=[f"{cache_prefix}_v1"],
-        build=build,
-        link=False,
-    )
-    t0 = _time.time() - 1000
-    for name in sorted(
-        os.listdir(feed), key=lambda n: os.path.getmtime(os.path.join(feed, n))
-    ):
-        if name.endswith(".parquet"):
-            t0 += 10.0
-            os.utime(os.path.join(feed, name), (t0, t0))
-
-
 def q_stream_dedup_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming dedup under the oracle: the events feed is replayed
     with PLANTED duplicates (every event_id % 10 == 0 row arrives again in
@@ -408,12 +378,9 @@ def q_stream_dedup_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file source triggers one file per micro-batch, in mtime order: the
     # full feed lands in batch 1, the duplicate rows in batch 2 — so the
     # dups must be caught by state persisted ACROSS batches, not within one
-    def _build(into: str) -> None:
-        w = _feed_writer(into)
-        w(e, 1)
-        w(e.filter(F.col("event_id") % 10 == 0), 2)
-
-    _staged_feed(e, feed, "sdup_feed", _build)
+    w = _feed_writer(feed)
+    w(e, 1)
+    w(e.filter(F.col("event_id") % 10 == 0), 2)
 
     stream = (
         spark.readStream.schema(e.schema)
@@ -471,20 +438,17 @@ def q_stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch × bands) probe + O(kept batch) append, independent of corpus
     size.
 
-    Round 7: the corpus index is served from the stage cache
-    (llm/dedup.py staged_minhash_index — the per-run cold-build was the
-    whole 14 s bench line; the run now pays an OS file copy + DDL
-    registration, its actual steady-state being probe+append only), and
-    _process is replay-safe (advisor r6): each batch's result lands in
-    its own overwrite-mode subdirectory and the index append is guarded
-    by a processed-batch marker, so a micro-batch RETRY never
-    double-counts output rows and never re-appends a FULLY-committed
-    batch.  (The three index inserts are not transactional: a crash
-    BETWEEN them followed by a replay re-appends the tables that had
-    already committed — the marker bounds the blast radius to one
-    partial batch, it is not exactly-once; a production loop would
-    anti-join the append against already-indexed doc_ids or write the
-    three tables under a single commit protocol.)"""
+    The corpus index is built per run (llm/dedup.py
+    build_minhash_index), and _process is replay-safe (advisor r6): each
+    batch's result lands in its own overwrite-mode subdirectory and the
+    index append is guarded by a processed-batch marker, so a micro-batch
+    RETRY never double-counts output rows and never re-appends a
+    FULLY-committed batch.  (The three index inserts are not
+    transactional: a crash BETWEEN them followed by a replay re-appends
+    the tables that had already committed — the marker bounds the blast
+    radius to one partial batch, it is not exactly-once; a production
+    loop would anti-join the append against already-indexed doc_ids or
+    write the three tables under a single commit protocol.)"""
     import hashlib
     import os
     import tempfile
@@ -494,19 +458,18 @@ def q_stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     arriving = d.filter(F.col("doc_id") % 4 == 0)
-    # STABLE prefix per (format, sf): staged tables are re-registered at
-    # a fresh work_dir every run (appends stay run-local), so a uuid
-    # prefix only leaked 3 catalog tables per run and defeated the
-    # format-check memo (round 8; the q_sim_ivf_index advisor item,
-    # same cause)
+    # STABLE prefix per (format, sf): the tables are re-registered at a
+    # fresh path every run (appends stay run-local), so a uuid prefix
+    # only leaked 3 catalog tables per run and defeated the format-check
+    # memo (round 8; the q_sim_ivf_index advisor item, same cause)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     prefix = f"fs_stream_near_v{D.INDEX_FORMAT_VERSION}_{tag}"
     # buckets=8: per-probe index scans cost one task per bucket; at this
     # corpus (~45 k docs) 8 buckets keeps ~5 k docs/bucket — bucket count
     # is a sizing knob that should track corpus volume, and 16 was paying
     # double the per-task overhead for no parallelism gain (round 8)
-    D.staged_minhash_index(
-        corpus, spark, prefix, tempfile.mkdtemp(prefix="fossa_snear_idx_"),
+    D.build_minhash_index(
+        corpus, prefix, tempfile.mkdtemp(prefix="fossa_snear_idx_"),
         buckets=8,
     )
 
@@ -523,16 +486,10 @@ def q_stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one file per micro-batch, explicit mtime order (_feed_writer):
     # batch 1 must be fully processed — probed AND appended — before
-    # batch 2's planted re-emissions arrive.  The feed bytes are
-    # deterministic per corpus snapshot, so they're served from the
-    # stage cache (round 8: the two read-documents-and-write jobs were
-    # ~2 s of every run).
-    def _build_feed(into: str) -> None:
-        w = _feed_writer(into)
-        w(b1, 1)
-        w(b2.unionByName(planted), 2)
-
-    _staged_feed(d, feed, "snear_feed", _build_feed)
+    # batch 2's planted re-emissions arrive.
+    w = _feed_writer(feed)
+    w(b1, 1)
+    w(b2.unionByName(planted), 2)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch hands a frame bound to the micro-batch CLONE of
@@ -647,36 +604,27 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-batch cost is O(batch) probe + O(novel) append —
     state lives in bucketed storage and the partitioned shard layout,
     never executor memory; the delta read prunes to the batch's own
-    directories.  Base index and base shards are per-corpus-deterministic
-    and served from the stage cache (hard links; appends stay
-    run-local)."""
+    directories.  Base index and base shards are written per run, so
+    appends stay run-local."""
     import hashlib
     import tempfile
 
     from fossa_spark.llm import curation as C
     from fossa_spark.llm import dedup as D
-    from fossa_spark.sources import stage_files
 
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     arriving = d.filter(F.col("doc_id") % 4 == 0).select("doc_id", "text")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    # stable per-(format, sf) prefix; re-registered at a fresh hard-link
-    # work_dir per run, so appends never reach the cache (house pattern)
-    digest = D.staged_exact_index(
-        corpus, spark, f"fs_singest_{tag}",
-        tempfile.mkdtemp(prefix="fossa_singest_idx_"),
+    # stable per-sf name, re-registered at a fresh path per run
+    digest = f"fs_singest_{tag}_digest"
+    D.build_exact_index(
+        corpus, spark, digest, tempfile.mkdtemp(prefix="fossa_singest_idx_")
     )
 
     empty_comp = spark.createDataFrame([], "doc_id long, component long")
     shard_dir = tempfile.mkdtemp(prefix="fossa_singest_shards_")
-
-    def _build_base(into: str) -> None:
-        C.write_training_shards(corpus, empty_comp, into, n_shards=16)
-
-    # same cache entry as q_shard_delta's base layout (same build, params)
-    stage_files(d, shard_dir, cache_prefix="shard_base",
-                params=["shard_base_v2", 16], build=_build_base)
+    C.write_training_shards(corpus, empty_comp, shard_dir, n_shards=16)
 
     feed = tempfile.mkdtemp(prefix="fossa_singest_feed_")
     out_dir = tempfile.mkdtemp(prefix="fossa_singest_out_")
@@ -692,12 +640,9 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + F.lit(20_000_000)).alias("doc_id"), "text")
     )
 
-    def _build_feed(into: str) -> None:
-        w = _feed_writer(into)
-        w(b1, 1)
-        w(b2.unionByName(planted_corpus).unionByName(planted_b1), 2)
-
-    _staged_feed(d, feed, "singest_feed", _build_feed)
+    w = _feed_writer(feed)
+    w(b1, 1)
+    w(b2.unionByName(planted_corpus).unionByName(planted_b1), 2)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_tag = f"b{batch_id}"
@@ -800,15 +745,12 @@ def q_stream_upsert_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = tempfile.mkdtemp(prefix="fossa_upsert_feed_")
 
-    def _build(into: str) -> None:
-        # explicit mtime spacing via _feed_writer: the upsert result is
-        # order-independent (keep-newest by ts/event_id), but a stable
-        # batch order keeps runs comparable
-        w = _feed_writer(into)
-        w(e.filter(F.col("event_id") % 2 == 0), 1)
-        w(e.filter(F.col("event_id") % 2 == 1), 2)
-
-    _staged_feed(e, feed, "upsert_feed", _build)
+    # explicit mtime spacing via _feed_writer: the upsert result is
+    # order-independent (keep-newest by ts/event_id), but a stable
+    # batch order keeps runs comparable
+    write = _feed_writer(feed)
+    write(e.filter(F.col("event_id") % 2 == 0), 1)
+    write(e.filter(F.col("event_id") % 2 == 1), 2)
 
     state: dict = {"df": None}
     w = W.partitionBy("user_id").orderBy(
@@ -856,7 +798,7 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster count as the learning-rate schedule). Initialization:
     the k lowest vec_ids of the FIRST batch. Because every update is a
     pure integer function of (batch contents, batch order) and the
-    batch order is pinned by the staged feed's mtimes, the DuckDB
+    batch order is pinned by the feed's mtimes, the DuckDB
     oracle unrolls the whole stream batch by batch and the final
     (centroid, count) state hash-matches.
 
@@ -874,12 +816,9 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     feed = tempfile.mkdtemp(prefix="fossa_kmeans_feed_")
 
-    def _build(into: str) -> None:
-        w = _feed_writer(into)
-        for i in range(3):
-            w(e.filter(F.col("vec_id") % 3 == i), i + 1)
-
-    _staged_feed(e, feed, "kmeans_feed", _build)
+    w = _feed_writer(feed)
+    for i in range(3):
+        w(e.filter(F.col("vec_id") % 3 == i), i + 1)
 
     state: dict = {}
 
@@ -897,7 +836,7 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # mismatch — a feed regression must be an ERROR here.
                 raise ValueError(
                     "q_stream_kmeans: first micro-batch is empty — the "
-                    "staged feed always starts with the vec_id%3==0 "
+                    "feed always starts with the vec_id%3==0 "
                     "slice; a deferred init would diverge from the "
                     "unrolled oracle"
                 )
@@ -970,12 +909,9 @@ def q_stream_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = tempfile.mkdtemp(prefix="fossa_linreg_feed_")
 
-    def _build(into: str) -> None:
-        w = _feed_writer(into)
-        w(li.filter(F.col("l_orderkey") % 2 == 0), 1)
-        w(li.filter(F.col("l_orderkey") % 2 == 1), 2)
-
-    _staged_feed(li, feed, "linreg_feed", _build)
+    w = _feed_writer(feed)
+    w(li.filter(F.col("l_orderkey") % 2 == 0), 1)
+    w(li.filter(F.col("l_orderkey") % 2 == 1), 2)
 
     keys = ["l_returnflag", "l_linestatus"]
     state: dict = {"m": None}
@@ -1066,12 +1002,9 @@ def q_stream_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = tempfile.mkdtemp(prefix="fossa_svers_feed_")
 
-    def _build_feed(into: str) -> None:
-        w = _feed_writer(into)
-        w(b1, 1)
-        w(b2, 2)
-
-    _staged_feed(base, feed, "svers_feed", _build_feed)
+    w = _feed_writer(feed)
+    w(b1, 1)
+    w(b2, 2)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         V.commit(tbl, batch_df, tag=f"b{batch_id}")
@@ -1192,7 +1125,7 @@ def q_stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 6): the q_dedup_span capability run the way a 100 TB pipeline
     actually runs it — new micro-batches PROBE a persisted anchor
     index instead of re-scanning the corpus.  Base corpus (75% slice)
-    anchors are staged once; each arriving micro-batch computes
+    anchors are written once; each arriving micro-batch computes
     anchors for its own documents only, finds every maximal ≥ 16-token
     span shared with ANY earlier document (base ∪ previously appended
     batches), and appends its anchors for later batches.  Batch 2
@@ -1216,7 +1149,6 @@ def q_stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from fossa_spark.llm import dedup as D
-    from fossa_spark.sources import stage_files
 
     d = spread(load(spark, sf_dir, "documents"), spark).select(
         "doc_id", "text"
@@ -1230,33 +1162,20 @@ def q_stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text")
     )
 
-    # immutable base anchor table, staged per corpus fingerprint; the
-    # per-run APPENDS go to a fresh working dir so the cache never
-    # sees a mutated table
+    # the base anchor table is written once and never mutated; the
+    # per-batch APPENDS go to a separate working dir
     base_dir = tempfile.mkdtemp(prefix="fossa_sspan_base_")
-
-    def _build(into: str) -> None:
-        D.span_anchors(base, "text", "doc_id", 8).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        base, base_dir,
-        cache_prefix="sspan_base_anchors",
-        params=["sspan_base_v1", 8],
-        build=_build,
+    D.span_anchors(base, "text", "doc_id", 8).write.mode("overwrite").parquet(
+        base_dir
     )
     work_dir = tempfile.mkdtemp(prefix="fossa_sspan_work_")
     feed = tempfile.mkdtemp(prefix="fossa_sspan_feed_")
     out_dir = tempfile.mkdtemp(prefix="fossa_sspan_out_")
     markers = tempfile.mkdtemp(prefix="fossa_sspan_mark_")
 
-    def _build_feed(into: str) -> None:
-        w = _feed_writer(into)
-        w(b1, 1)
-        w(b2.unionByName(planted), 2)
-
-    _staged_feed(d, feed, "sspan_feed", _build_feed)
+    w = _feed_writer(feed)
+    w(b1, 1)
+    w(b2.unionByName(planted), 2)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(markers, f"done_b{batch_id}")
@@ -1718,12 +1637,9 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feed = tempfile.mkdtemp(prefix="fossa_smerge_feed_")
 
-    def _build_feed(into: str) -> None:
-        w = _feed_writer(into)
-        w(b1, 1)
-        w(b2, 2)
-
-    _staged_feed(base, feed, "smerge_feed", _build_feed)
+    w = _feed_writer(feed)
+    w(b1, 1)
+    w(b2, 2)
 
     dels = [k % 12 == 0, k % 20 == 0]
 
@@ -1731,7 +1647,7 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_id >= len(dels):
             raise ValueError(
                 f"q_stream_merge: unexpected micro-batch {batch_id} — "
-                "the staged feed writes exactly two files"
+                "the feed writes exactly two files"
             )
         V.merge_into(
             spark, tbl, batch_df,

@@ -9,8 +9,6 @@ dominant cost of fact-fact joins at 100 TB, paid once instead of per query.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,389 +29,6 @@ def write_bucketed(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-import threading as _threading
-
-_PROC_CACHE_ROOT: str | None = None
-_PROC_CACHE_ROOT_LOCK = _threading.Lock()
-
-
-def _default_cache_root() -> str:
-    """Per-PROCESS stage-cache root (round 15, VERDICT r14 item 1).
-
-    Rounds 7-14 defaulted to a repo-level ``.stage_cache/`` that
-    SURVIVED across bench runs, so every staged query's steady-state
-    bench time excluded its index/feed build cost — precomputation
-    keyed on the test data, which the optimization rules treat as
-    gaming (the r14 verdict flagged ``staged_brute_topk``'s cached
-    query *result* and ``quality_lr``'s cached model weights
-    specifically).  The default root is now a tempdir born with this
-    process and removed at exit: WITHIN-run reuse stays (one build
-    serves every consumer query in the same session — the legitimate
-    "index built once, probed many" §5 economics, same as a cluster
-    job that builds its index at startup), but every new bench/oracle
-    process rebuilds every staged artifact from the parquet inputs.
-    Callers that want durable staging must opt in with an explicit
-    ``cache_root``."""
-    global _PROC_CACHE_ROOT
-    # Double-checked under a lock: concurrent first callers (queries
-    # that launch independent staged builds from a thread pool, e.g.
-    # q_sim_recall's three index artifacts) must agree on ONE root — an
-    # unguarded lazy init let each racing thread mkdtemp its own root
-    # and cache into it, orphaning every entry but the last writer's
-    # (observed: 2 of q_sim_recall's 3 artifacts silently rebuilt on
-    # the next run).
-    if _PROC_CACHE_ROOT is None:
-        with _PROC_CACHE_ROOT_LOCK:
-            if _PROC_CACHE_ROOT is None:
-                import atexit
-                import os
-                import shutil
-                import tempfile
-
-                d = tempfile.mkdtemp(
-                    prefix=f"fossa_stage_cache_{os.getpid()}_"
-                )
-                atexit.register(shutil.rmtree, d, ignore_errors=True)
-                _PROC_CACHE_ROOT = d
-    return _PROC_CACHE_ROOT
-
-
-def _prune_stage_cache(root: str, cache_prefix: str, keep: int = 5,
-                       grace_s: float = 600.0) -> None:
-    """Evict stale stage-cache entries for ``cache_prefix``.
-
-    Generations: keep the ``keep`` most-recently-USED (serve paths touch
-    the dir mtime on every hit, so a hot entry can't be evicted before
-    cold ones).  ``_tmp_`` build dirs: only prune ones older than
-    ``grace_s`` — a young _tmp_ dir may be a CONCURRENT builder's
-    in-flight build; deleting it mid-build loses that builder's work and
-    forces a rebuild (advisor r8).  Old _tmp_ dirs are crash leftovers.
-    """
-    import os
-    import shutil
-    import time
-
-    now = time.time()
-
-    def mt(e: str) -> float:
-        try:
-            return os.path.getmtime(os.path.join(root, e))
-        except OSError:
-            return now  # vanished/racing entry: treat as fresh, skip
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    gens = sorted(
-        (e for e in entries if e.startswith(f"{cache_prefix}_")), key=mt
-    )
-    for stale in gens[:-keep]:
-        shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
-    for t in (e for e in entries if e.startswith(f"_tmp_{cache_prefix}_")):
-        if now - mt(t) > grace_s:
-            shutil.rmtree(os.path.join(root, t), ignore_errors=True)
-
-
-def _touch_cache_hit(staged: str) -> None:
-    """Refresh a cache generation's mtime on serve so the LRU prune in
-    :func:`_prune_stage_cache` sees it as recently used."""
-    import os
-
-    try:
-        os.utime(staged, None)
-    except OSError:
-        pass
-
-
-def _corpus_input_stats(corpus: DataFrame) -> "tuple[list, list]":
-    """(files, (path, size, mtime_ns) stats) of a relation's file-source
-    inputs, for stage-cache fingerprints — robust to ``persist()``.
-
-    ``DataFrame.inputFiles()`` consults the plan WITH cache substitution,
-    so a persist-marked relation reports zero input files; the round-7
-    staging helpers then silently fell back to a per-run direct build —
-    a caller adding ``.persist()`` for its own multi-consumer reuse
-    disabled the cross-run stage cache without any signal (round 14:
-    staged_ivf_index went 0.6 s → 7.3 s per run).  Collect the leaves of
-    the ANALYZED plan instead: file-source leaves expose their FileIndex
-    regardless of caching.  Falls back to ``inputFiles()`` for source
-    types the walk doesn't recognize."""
-    import os
-
-    files: list = []
-    try:
-        it = corpus._jdf.queryExecution().analyzed().collectLeaves().iterator()
-        while it.hasNext():
-            leaf = it.next()
-            try:
-                for f in leaf.relation().location().inputFiles():
-                    files.append(f)
-            except Exception:
-                files = []  # unrecognized leaf: the listing is incomplete
-                break
-    except Exception:
-        files = []
-    if not files:
-        try:
-            files = list(corpus.inputFiles())
-        except Exception:
-            return [], []
-    files = sorted(files)
-    try:
-        stats = []
-        for f in files:
-            p = f.removeprefix("file:")
-            st = os.stat(p)
-            stats.append((p, st.st_size, st.st_mtime_ns))
-    except Exception:
-        return [], []
-    return files, stats
-
-
-def stage_bucketed_tables(
-    corpus: DataFrame,
-    spark: SparkSession,
-    table_prefix: str,
-    work_dir: str,
-    *,
-    cache_prefix: str,
-    params: list,
-    tables: dict[str, tuple[str, str] | None],
-    buckets: int,
-    build,
-    cache_root: str | None = None,
-) -> None:
-    """Generic per-corpus-fingerprint staging for a GROUP of persisted
-    tables (round 7) — the machinery behind llm/dedup.py's
-    staged_minhash_index and llm/similarity.py's staged_ivf_index.
-
-    ``build(tmp_prefix, tmp_dir)`` must write the table group under
-    ``tmp_dir`` registering catalog tables ``{tmp_prefix}_{sub}`` for
-    every key of ``tables`` (value = (cluster_col, sort_col) for a
-    bucketed table, None for a plain one; a ``meta`` subdir must exist —
-    its _SUCCESS is the completion marker).  The first call per corpus
-    fingerprint builds into the stage cache; every call then COPIES the
-    immutable cached files into ``work_dir`` (an OS-level copy preserves
-    bucket layout — Spark derives the bucket id from the file name) and
-    re-registers fresh catalog tables under ``table_prefix`` with the
-    same CLUSTERED BY spec, so zero-shuffle probes and insertInto
-    re-clustering survive verbatim while per-run appends can never
-    pollute the cache.
-
-    Key soundness: sha256 over (params, every input file's
-    path+size+mtime_ns, the corpus's ANALYZED-PLAN string with
-    expression ids normalized — distinguishing FILTERED variants of the
-    same files).  A plan-format change across Spark versions just
-    misses the cache, never serves a wrong group.  Any staging failure
-    falls back to ``build(table_prefix, work_dir)`` directly.
-    """
-    import hashlib
-    import json
-    import os
-    import re
-    import shutil
-    import uuid
-
-    if not re.fullmatch(r"[A-Za-z0-9_]+", table_prefix):
-        raise ValueError(f"table_prefix must be an identifier: {table_prefix!r}")
-    subdirs = list(tables)
-    files, stats = _corpus_input_stats(corpus)
-    if not files:
-        return build(table_prefix, work_dir)
-    plan = re.sub(r"#\d+", "#", corpus._jdf.queryExecution().analyzed().toString())
-    key = hashlib.sha256(
-        json.dumps(params + [plan, stats]).encode()
-    ).hexdigest()[:24]
-    root = cache_root or _default_cache_root()
-    staged = os.path.join(root, f"{cache_prefix}_{key}")
-    try:
-        if not os.path.exists(os.path.join(staged, "meta", "_SUCCESS")):
-            os.makedirs(root, exist_ok=True)
-            # prune stale corpus generations (fixture mtimes change per
-            # round; keep the newest few per cache_prefix) — LRU with a
-            # grace period for in-flight _tmp_ builds (advisor r8)
-            _prune_stage_cache(root, cache_prefix)
-            tmp = os.path.join(root, f"_tmp_{cache_prefix}_{uuid.uuid4().hex}")
-            tmp_prefix = f"_stage_{uuid.uuid4().hex[:12]}"
-            build(tmp_prefix, tmp)
-            # schema SIDECAR (round 8): registration used to re-infer each
-            # table's schema from its parquet footers on EVERY serve
-            # (~0.15 s × tables of driver latency per run); the schemas
-            # are fixed at build time, so record them once.  Serves from
-            # pre-sidecar cache entries fall back to footer inference.
-            schemas = {
-                t: ", ".join(
-                    f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in spark.table(f"{tmp_prefix}_{t}").schema.fields
-                )
-                for t in subdirs
-            }
-            with open(os.path.join(tmp, "_fossa_schemas.json"), "w") as fh:
-                json.dump(schemas, fh)
-            for t in subdirs:
-                spark.sql(f"DROP TABLE IF EXISTS {tmp_prefix}_{t}")
-            try:
-                os.rename(tmp, staged)  # atomic: race losers fall through
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(staged, "meta", "_SUCCESS")):
-                return build(table_prefix, work_dir)
-        # Per-run "copy" = HARD LINKS (round 8, VERDICT r7 item 1): parquet
-        # files are immutable once written — Spark appends create NEW
-        # files and overwrites unlink old ones, neither touches an
-        # existing inode — so linking the cached files into work_dir gives
-        # the same mutable-table isolation as a byte copy at metadata
-        # cost (the copy was the whole staging bill: ~1 s of file I/O per
-        # run at sf0.1).  Deleting a linked file (or pruning the cache
-        # generation itself) never affects the other side.  Cross-device
-        # or exotic-FS failures fall back to a real copy per file.
-        def _link_or_copy(src: str, dst: str) -> None:
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-
-        _touch_cache_hit(staged)
-        for sub in subdirs:
-            shutil.copytree(
-                os.path.join(staged, sub),
-                os.path.join(work_dir, sub),
-                dirs_exist_ok=True,
-                copy_function=_link_or_copy,
-            )
-        sidecar = {}
-        try:
-            with open(os.path.join(staged, "_fossa_schemas.json")) as fh:
-                sidecar = json.load(fh)
-        except (OSError, ValueError):
-            pass  # pre-sidecar cache entry: infer from footers below
-        for sub in subdirs:
-            loc = os.path.join(work_dir, sub)
-            cols = sidecar.get(sub) or ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in spark.read.parquet(loc).schema.fields
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{sub}")
-            spec = tables[sub]
-            cluster = (
-                f"CLUSTERED BY (`{spec[0]}`) SORTED BY (`{spec[1]}`) "
-                f"INTO {buckets} BUCKETS "
-                if spec is not None
-                else ""
-            )
-            spark.sql(
-                f"CREATE TABLE {table_prefix}_{sub} ({cols}) USING PARQUET "
-                f"{cluster}LOCATION '{loc}'"
-            )
-    except Exception:
-        # staging/registration failed mid-way: rebuild directly (the
-        # builder overwrites any partial copies in work_dir)
-        for t in subdirs:
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{t}")
-            except Exception:
-                pass
-        return build(table_prefix, work_dir)
-
-
-def stage_files(
-    corpus: DataFrame,
-    work_dir: str,
-    *,
-    cache_prefix: str,
-    params: list,
-    build,
-    cache_root: str | None = None,
-    link: bool = True,
-) -> None:
-    """Generic per-corpus-fingerprint staging for a plain FILE artifact
-    (round 8) — the stage_bucketed_tables idea without catalog tables,
-    for deterministic derived files a query rebuilds identically every
-    run (e.g. a streaming query's micro-batch feed: reading the corpus
-    and writing the batch files was ~2 s of every run, for bytes that
-    never change per corpus snapshot).
-
-    ``build(tmp_dir)`` must write the artifact's files under
-    ``tmp_dir``.  First call per fingerprint builds into the stage
-    cache; every call then HARD-LINKS the cached files into
-    ``work_dir`` (falling back to a byte copy cross-device).  Callers
-    that care about file mtimes (the file stream source orders by
-    modification time) should pass ``link=False`` and re-stamp after
-    staging — links share the inode, so an utime would reach back into
-    the cache.  Same fingerprint soundness as stage_bucketed_tables;
-    any failure falls back to a direct ``build(work_dir)``.
-    """
-    import hashlib
-    import json
-    import os
-    import re
-    import shutil
-    import uuid
-
-    files, stats = _corpus_input_stats(corpus)
-    if not files:
-        return build(work_dir)
-    plan = re.sub(r"#\d+", "#", corpus._jdf.queryExecution().analyzed().toString())
-    key = hashlib.sha256(
-        json.dumps(params + [plan, stats]).encode()
-    ).hexdigest()[:24]
-    root = cache_root or _default_cache_root()
-    staged = os.path.join(root, f"{cache_prefix}_{key}")
-    marker = os.path.join(staged, "_FOSSA_STAGED")
-    try:
-        if not os.path.exists(marker):
-            os.makedirs(root, exist_ok=True)
-            # prune stale generations AND orphaned build dirs (a builder
-            # that crashed mid-build leaves its _tmp_ dir behind — the
-            # round-8 review caught these accumulating unboundedly);
-            # LRU + in-flight-_tmp_ grace period (advisor r8)
-            _prune_stage_cache(root, cache_prefix)
-            tmp = os.path.join(root, f"_tmp_{cache_prefix}_{uuid.uuid4().hex}")
-            try:
-                build(tmp)
-                open(os.path.join(tmp, "_FOSSA_STAGED"), "w").close()
-            except Exception:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            try:
-                os.rename(tmp, staged)  # atomic: race losers fall through
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                return _fresh_build(build, work_dir)
-
-        def _link_or_copy(src: str, dst: str) -> None:
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-
-        _touch_cache_hit(staged)
-        shutil.copytree(
-            staged,
-            work_dir,
-            dirs_exist_ok=True,
-            copy_function=_link_or_copy if link else shutil.copy2,
-        )
-        os.unlink(os.path.join(work_dir, "_FOSSA_STAGED"))
-    except Exception:
-        # The serve may have failed PARTWAY through the copytree: for an
-        # append-mode builder (a micro-batch feed) building on top of
-        # half-copied files would leave DUPLICATE rows — wipe the work
-        # dir before the direct build (round-8 review).
-        return _fresh_build(build, work_dir)
-
-
-def _fresh_build(build, work_dir: str) -> None:
-    """stage_files' fallback: direct build into an EMPTIED work_dir."""
-    import os
-    import shutil
-
-    shutil.rmtree(work_dir, ignore_errors=True)
-    os.makedirs(work_dir, exist_ok=True)
-    return build(work_dir)
 
 
 def colocated_join(
@@ -636,8 +251,8 @@ def compact_bucketed_table(spark: SparkSession, table: str) -> tuple[int, int]:
     bucketed write emits one file per bucket), write it as a TEMP bucketed
     table beside the original (same key/sort/bucket count), then swap the
     directories and re-register the original name with the same CLUSTERED
-    BY DDL (the stage_bucketed_tables idiom — an OS-level rename preserves
-    bucket layout because Spark derives the bucket id from the file name).
+    BY DDL (an OS-level rename preserves bucket layout because Spark
+    derives the bucket id from the file name).
     The swap window is not atomic for concurrent readers; run it like any
     maintenance job, during a quiet window or on a snapshot.
 

@@ -708,47 +708,6 @@ def test_bpe_apply_roundtrip(spark):
     assert out0[1].n_pieces == len("ababababcd")
 
 
-def test_staged_ngram_pairs_identity_and_cache(spark, docs, tmp_path):
-    """staged_ngram_pairs must be value-identical to ngram_jaccard_pairs,
-    hit its parquet cache on the second call, and key the cache on
-    parameters (different min_jaccard → different staging dir)."""
-    import os
-
-    root = str(tmp_path / "stage")
-    direct = {
-        (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter, round(r.jaccard, 9))
-        for r in D.ngram_jaccard_pairs(docs, k=5, min_jaccard=0.5).collect()
-    }
-    staged1 = {
-        (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter, round(r.jaccard, 9))
-        for r in D.staged_ngram_pairs(
-            docs, k=5, min_jaccard=0.5, cache_root=root
-        ).collect()
-    }
-    assert staged1 == direct and direct
-    dirs = [d for d in os.listdir(root) if d.startswith("ngram_pairs_")]
-    assert len(dirs) == 1
-    # second call must READ (no new dirs, same rows)
-    staged2 = {
-        (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter, round(r.jaccard, 9))
-        for r in D.staged_ngram_pairs(
-            docs, k=5, min_jaccard=0.5, cache_root=root
-        ).collect()
-    }
-    assert staged2 == direct
-    assert len([d for d in os.listdir(root) if d.startswith("ngram_pairs_")]) == 1
-    # parameter change → new key, not a stale read
-    D.staged_ngram_pairs(docs, k=5, min_jaccard=0.7, cache_root=root).collect()
-    assert len([d for d in os.listdir(root) if d.startswith("ngram_pairs_")]) == 2
-    # non-file-backed input: staging skipped, still correct
-    mem = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "a b c d e f g h")],
-        "doc_id long, text string",
-    )
-    out = D.staged_ngram_pairs(mem, k=5, min_jaccard=0.1, cache_root=root)
-    assert out.count() == 1
-
-
 def test_setsim_candidate_mass_matches_join(spark, docs):
     """The one-aggregate mass estimate must equal the EXACT prefix-join
     row count the setsim engine would generate (same prefix formula)."""
@@ -831,25 +790,6 @@ def test_rrf_fuse_hand_example(spark):
     assert abs(out[1].rrf - round(1 / 61, 8)) < 1e-12
 
 
-def test_staged_shingle_rows_identical(spark, docs, tmp_path):
-    """staged_shingle_rows must be row-identical to shingle_hash_rows on
-    first call (compute+write) AND on cache hit (read), and the staged
-    directory must exist after the first call."""
-    import os
-
-    direct = {(r.doc_id, r._sh)
-              for r in D.shingle_hash_rows(docs, "text", "doc_id", 5).collect()}
-    root = str(tmp_path / "stage")
-    first = {(r.doc_id, r._sh)
-             for r in D.staged_shingle_rows(docs, k=5, cache_root=root).collect()}
-    assert first == direct
-    staged_dirs = [e for e in os.listdir(root) if e.startswith("shingle_rows_k5_")]
-    assert len(staged_dirs) == 1
-    hit = {(r.doc_id, r._sh)
-           for r in D.staged_shingle_rows(docs, k=5, cache_root=root).collect()}
-    assert hit == direct
-
-
 def test_pq_topk_full_shortlist_is_exact(vecs):
     """shortlist >= |corpus| means the exact re-rank covers every
     candidate, so PQ must reproduce brute-force top-k row for row — the
@@ -861,22 +801,6 @@ def test_pq_topk_full_shortlist_is_exact(vecs):
     exact = sorted(map(tuple, S.brute_force_topk(q, c, k=5).collect()))
     pq = sorted(map(tuple, S.pq_topk(q, c, k=5, shortlist=n).collect()))
     assert pq == exact
-
-
-def test_staged_simhash_table_equivalence(spark, docs, tmp_path):
-    """staged_simhash_table must be row-identical to the direct signature
-    pass, and simhash_pairs(sigs=staged) must equal the unstaged pairs
-    (the sh_rows-style override contract, round 8)."""
-    direct = sorted(map(tuple, D.simhash_table(docs).collect()))
-    staged_df = D.staged_simhash_table(docs, cache_root=str(tmp_path / "c"))
-    staged = sorted(map(tuple, staged_df.collect()))
-    assert staged == direct
-    p1 = sorted(map(tuple, D.simhash_pairs(docs, max_hamming=3).collect()))
-    p2 = sorted(map(tuple, D.simhash_pairs(
-        docs, max_hamming=3,
-        sigs=D.staged_simhash_table(docs, cache_root=str(tmp_path / "c")),
-    ).collect()))
-    assert p1 == p2
 
 
 def test_quality_lr_learns_and_composes(spark):
@@ -1383,28 +1307,6 @@ def test_sim_recall_invariants(spark):
     for path, rows in by_path.items():
         mean_recall = sum(r.n_hits for r in rows) / (10.0 * len(rows))
         assert mean_recall >= 0.3, (path, mean_recall)
-
-
-def test_staged_brute_topk_identical_to_direct(spark):
-    """The staged ranking artifact must be row-identical to a direct
-    brute_force_topk run (same conventions), and a second call must be
-    served from the stage cache with identical bytes."""
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = e.filter("vec_id < 20").selectExpr("vec_id q_id", "embedding q_vec")
-    c = e.selectExpr("vec_id c_id", "embedding c_vec")
-    direct = {
-        (r.q_id, r.c_id, r.score, r.rk)
-        for r in S.brute_force_topk(q, c, k=10).collect()
-    }
-    s1 = {
-        (r.q_id, r.c_id, r.score, r.rk)
-        for r in S.staged_brute_topk(e, n_q=20, k=10).collect()
-    }
-    s2 = {
-        (r.q_id, r.c_id, r.score, r.rk)
-        for r in S.staged_brute_topk(e, n_q=20, k=10).collect()
-    }
-    assert direct == s1 == s2
 
 
 def test_dedup_recall_s_curve_sanity(spark):

@@ -64,123 +64,29 @@ def test_oracles_have_queries():
     assert not missing, f"oracle entries without a query: {missing}"
 
 
-def test_registration_order_contract():
-    """Driver contract (round 7 shape): rows-only queries that have NEVER
-    had a driver slot — or whose output changed since their last driver
-    run (CHANGED_IN pending) — are pinned to the very front (they can't
-    hash-match, but an err='no_oracle' 'ran' row is still driver
-    evidence — VERDICT r5 item 1 / r6 item 1); the pin SELF-RETIRES once
-    a CORRECTNESS artifact records a (post-change) ran row.  After the
-    pin, every oracle-backed query precedes every remaining rows-only
-    query (rounds 1-5 contract: a count-capped run verifies oracle
-    signal first), and the two most expensive rows-only plans run dead
-    last within their block so a time-boxed run loses them, not signal."""
-    from fossa_spark.queries import (
-        _ROWS_ONLY_STALE_AFTER,
-        _changed_pending_rows_only,
-        _ever_seen_names,
-        _ran_rounds,
-    )
+def test_registry_is_plain_module_order():
+    """all_queries() lists each module's QUERIES in _MODULES order and in
+    the module's own order — nothing in the checkout reorders it."""
+    from importlib import import_module
 
-    names = list(_QUERIES)
-    seen = _ever_seen_names()
-    pending = _changed_pending_rows_only(dict(_QUERIES), _ORACLES)
-    ran, max_round = _ran_rounds()
-    # round 9: rows-only queries whose last driver 'ran' row has aged
-    # past the staleness horizon are also legitimately pinned (their
-    # evidence only decays — see _ROWS_ONLY_STALE_AFTER)
-    stale = {
-        n for n in names
-        if n not in _ORACLES
-        and n in ran
-        and max_round - ran[n] >= _ROWS_ONLY_STALE_AFTER
-    }
-    # the pin prefix: everything before the first oracle-backed name
-    first_backed = next(i for i, n in enumerate(names) if n in _ORACLES)
-    pin = names[:first_backed]
-    assert all(
-        n not in _ORACLES and (n not in seen or n in pending or n in stale)
-        for n in pin
-    ), f"pin prefix must be never-seen, changed-pending, or stale: {pin}"
-    # after the pin: the full oracle-backed inventory, uninterrupted
-    backed_block = names[first_backed : first_backed + len(_ORACLES)]
-    assert all(n in _ORACLES for n in backed_block), (
-        "a rows-only query interrupts the oracle-backed block"
-    )
-    # round 12 (r11 verdict item 1): within the oracle-backed block,
-    # every never-driver-hash-checked query precedes every once-green
-    # query (CHANGED_IN-pending excepted — those legitimately front-run
-    # everything).  A never-verified oracle is a strictly bigger risk
-    # than any aged green row; the old aging key deferred r11's 12 new
-    # queries past the 50-slot window indefinitely.
-    from fossa_spark.queries import CHANGED_IN, _last_verified_round
+    from fossa_spark.queries import _MODULES
 
-    last = _last_verified_round()
-    nonchanged = [n for n in backed_block if n not in CHANGED_IN]
-    first_green = next(
-        (i for i, n in enumerate(nonchanged) if n in last), len(nonchanged)
-    )
-    laggards = [n for n in nonchanged[first_green:] if n not in last]
-    assert not laggards, (
-        f"never-driver-verified oracle queries sorted after green ones: "
-        f"{laggards}"
-    )
-    _assert_expensive_last_within_block(names, pin)
+    expected = [n for m in _MODULES for n in import_module(m).QUERIES]
+    assert list(all_queries()) == expected
 
 
-def _assert_expensive_last_within_block(names, pin):
-    """The expensive rows-only invariant is PER-ELEMENT (r10 verdict item
-    1): each of q_dedup_near/q_pipeline must run dead last *within
-    whichever block it occupies* — the stale-pin prefix or the global
-    tail.  The r10 artifact drop split the pair (the _ROWS_ONLY_PIN_CAP
-    admitted q_pipeline but not q_dedup_near), a state the old
-    all-pinned-or-none assertion didn't model and flapped red on."""
-    expensive = ["q_dedup_near", "q_pipeline"]
-    pinned = [e for e in expensive if e in pin]
-    unpinned = [e for e in expensive if e not in pin]
-    if pinned:
-        assert pin[-len(pinned):] == pinned, (
-            f"pinned expensive queries must close the pin prefix: "
-            f"pin tail {pin[-len(pinned):]} != {pinned}"
-        )
-    if unpinned:
-        assert names[-len(unpinned):] == unpinned, (
-            f"unpinned expensive queries must close the registry: "
-            f"tail {names[-len(unpinned):]} != {unpinned}"
-        )
-
-
-def test_registration_order_split_pin_regression(monkeypatch):
-    """Synthesize the exact artifact state that turned r10 red: enough
-    stale rows-only queries that _ROWS_ONLY_PIN_CAP admits q_pipeline
-    (ran r5) but excludes q_dedup_near (ran r6) — the pair splits across
-    pin and tail, and the per-element invariant must still hold."""
+def test_broken_query_module_raises(monkeypatch):
+    """A query module whose import fails must fail the registry, not
+    silently drop its whole family (queries and oracles alike)."""
     import fossa_spark.queries as q
 
-    rows_only = [n for n in _QUERIES if n not in _ORACLES]
-    cheap = [n for n in rows_only if n not in ("q_dedup_near", "q_pipeline")]
-    assert len(cheap) >= q._ROWS_ONLY_PIN_CAP - 1, "fixture premise"
-    fill = q._ROWS_ONLY_PIN_CAP - 1
-    ran = {"spark_rows": 1, "err": "no_oracle"}
-    doc5 = {n: dict(ran) for n in cheap[:fill]}
-    doc5["q_pipeline"] = dict(ran)
-    doc6 = {"q_dedup_near": dict(ran)}
-    # every other query gets a fresh r10 row so only the split cohort pins
-    doc10 = {
-        n: {"spark_rows": 1, "err": None, "hash_match": True}
-        for n in _ORACLES
-    }
-    doc10.update({n: dict(ran) for n in cheap[fill:]})
     monkeypatch.setattr(
-        q, "_ARTIFACTS_CACHE", ((5, doc5), (6, doc6), (10, doc10))
+        q, "_MODULES", q._MODULES + ["fossa_spark.queries._no_such_family"]
     )
-    names = list(q.all_queries())
-    first_backed = next(i for i, n in enumerate(names) if n in _ORACLES)
-    pin = names[:first_backed]
-    assert "q_pipeline" in pin and "q_dedup_near" not in pin, (
-        f"fixture failed to split the pair: pin={pin}"
-    )
-    _assert_expensive_last_within_block(names, pin)
+    with pytest.raises(ModuleNotFoundError):
+        q.all_queries()
+    with pytest.raises(ModuleNotFoundError):
+        q.all_oracles()
 
 
 def test_entry_smoke(spark):

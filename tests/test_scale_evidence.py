@@ -263,100 +263,6 @@ def test_incremental_index_append_roundtrip(spark, skewed_docs, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS t_app_{t}")
 
 
-def test_staged_minhash_index_equivalence(spark, skewed_docs, tmp_path):
-    """staged_minhash_index (round 7): the staged copy must (a) probe
-    IDENTICALLY to a fresh build, (b) keep the staged cache IMMUTABLE
-    under per-run appends (each run mutates its own copy), (c) keep the
-    bucketed zero-shuffle probe property on the copied tables, and
-    (d) fingerprint derived (filtered) corpora apart from their base."""
-    import os
-    from pathlib import Path
-
-    prefixes = ("t_fresh2", "t_st1", "t_st2", "t_stf")
-    for p in prefixes:
-        for t in ("bands", "shingles", "sizes", "meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {p}_{t}")
-    # staging engages only for file-backed corpora — write-read the fixture
-    skewed_docs.filter(F.col("doc_id") < 2000).write.mode("overwrite").parquet(
-        str(tmp_path / "corpus")
-    )
-    corpus = spark.read.parquet(str(tmp_path / "corpus"))
-    cache = str(tmp_path / "cache")
-
-    D.build_minhash_index(corpus, "t_fresh2", str(tmp_path / "fresh"))
-    D.staged_minhash_index(
-        corpus, spark, "t_st1", str(tmp_path / "run1"), cache_root=cache
-    )
-    batch = spark.createDataFrame(
-        [
-            (9001, "quick brown fox jumps over the lazy dog near the quiet "
-                   "river bank today beta"),
-            (9002, "completely novel content about quantum chromodynamics "
-                   "lattice simulations and gluon field configurations"),
-        ],
-        "doc_id long, text string",
-    )
-    fresh = sorted(map(tuple, D.incremental_dedup(batch, spark, "t_fresh2").collect()))
-    staged = sorted(map(tuple, D.incremental_dedup(batch, spark, "t_st1").collect()))
-    assert fresh == staged, f"staged probe diverged:\n{fresh}\nvs\n{staged}"
-
-    entries = [e for e in os.listdir(cache) if e.startswith("minhash_idx_")]
-    assert len(entries) == 1, entries
-
-    def snap(d):
-        return sorted(
-            (str(p.relative_to(d)), p.stat().st_size)
-            for p in Path(d).rglob("*")
-            if p.is_file()
-        )
-
-    before = snap(cache)
-    # second run: cache hit into its own prefix/work_dir, then append —
-    # the cache bytes must not move
-    D.staged_minhash_index(
-        corpus, spark, "t_st2", str(tmp_path / "run2"), cache_root=cache
-    )
-    novel = batch.filter(F.col("doc_id") == 9002)
-    D.append_to_minhash_index(novel, spark, "t_st2")
-    assert snap(cache) == before, "per-run append leaked into the staged cache"
-    # run 2 now sees the appended doc; run 1's independent copy does not
-    day2 = spark.createDataFrame(
-        [(9200, "completely novel content about quantum chromodynamics "
-                "lattice simulations and gluon field configuration")],
-        "doc_id long, text string",
-    )
-    out2 = {r.doc_id: r for r in
-            D.incremental_dedup(day2, spark, "t_st2").collect()}
-    assert out2[9200].keep is False and out2[9200].dup_of == 9002
-    out1 = {r.doc_id: r for r in
-            D.incremental_dedup(day2, spark, "t_st1").collect()}
-    assert out1[9200].keep is True
-
-    # copied tables keep the bucketed-scan property (no index-side shuffle)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        sh = batch.select("doc_id", D.word_shingles("text", 5).alias("shingles"))
-        sigs = D.minhash_signatures(sh, num_hashes=16)
-        brows = D.band_rows(sigs, "doc_id", "minhash", 8, 2)
-        a = audit(brows.join(spark.table("t_st1_bands"), "bucket"))
-        assert "Bucketed: true" in a.formatted
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
-
-    # a FILTERED variant of the same files fingerprints separately (the
-    # analyzed-plan component): staging it adds a second cache entry
-    D.staged_minhash_index(
-        corpus.filter(F.col("doc_id") % 2 == 0), spark, "t_stf",
-        str(tmp_path / "runf"), cache_root=cache,
-    )
-    entries = [e for e in os.listdir(cache) if e.startswith("minhash_idx_")]
-    assert len(entries) == 2, entries
-    for p in prefixes:
-        for t in ("bands", "shingles", "sizes", "meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {p}_{t}")
-
-
 def test_exact_index_probe_shape_and_roundtrip(spark, skewed_docs, tmp_path):
     """build_exact_index / incremental_exact_dedup (round 7): the digest
     probe must read the index bucketed with no index-side Exchange, an
@@ -432,20 +338,6 @@ def test_ivf_index_lifecycle(spark, tmp_path):
         map(tuple, S.ivf_index_topk(q, spark, "t_ivf", k=5, nprobe=4).collect())
     )
     assert memory == persisted, f"persisted probe diverged\n{memory}\n{persisted}"
-
-    # the STAGED copy probes identically too (stage → cache-hit → copy)
-    for t in ("cells", "centroids", "meta"):
-        spark.sql(f"DROP TABLE IF EXISTS t_ivfs_{t}")
-    S.staged_ivf_index(
-        c, spark, "t_ivfs", str(tmp_path / "ivfs"), n_centroids=16,
-        cache_root=str(tmp_path / "ivf_cache"),
-    )
-    staged = sorted(
-        map(tuple, S.ivf_index_topk(q, spark, "t_ivfs", k=5, nprobe=4).collect())
-    )
-    assert staged == memory, f"staged probe diverged\n{staged}\n{memory}"
-    for t in ("cells", "centroids", "meta"):
-        spark.sql(f"DROP TABLE IF EXISTS t_ivfs_{t}")
 
     # plan property: inverted lists scan bucketed, no Exchange above it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -619,67 +511,6 @@ def test_locality_subblock_recall_vs_random_split_sf1(spark):
     assert n_loc >= n_rnd, (n_loc, n_rnd)
 
 
-def test_stage_files_serves_identical_bytes_and_falls_back(spark, tmp_path):
-    """stage_files (round 8): (a) first call builds into the cache and
-    serves; (b) second call with the same fingerprint serves the SAME
-    bytes WITHOUT re-running the builder; (c) hard links are the default
-    serve (same inode as the cache — metadata-cost staging); (d) a
-    builder that writes nothing (no marker) degrades to a direct build
-    into the work dir."""
-    import os
-
-    from fossa_spark.queries._util import load
-    from fossa_spark.sources import stage_files
-    from tests.conftest import SF_DIR
-
-    d = load(spark, SF_DIR, "documents")
-    calls = []
-
-    def build(into):
-        calls.append(into)
-        os.makedirs(into, exist_ok=True)
-        with open(os.path.join(into, "artifact.bin"), "wb") as fh:
-            fh.write(b"payload-v1")
-
-    root = str(tmp_path / "cache")
-    w1, w2 = str(tmp_path / "w1"), str(tmp_path / "w2")
-    os.makedirs(w1); os.makedirs(w2)
-    stage_files(d, w1, cache_prefix="t_sf", params=["v1"], build=build,
-                cache_root=root)
-    stage_files(d, w2, cache_prefix="t_sf", params=["v1"], build=build,
-                cache_root=root)
-    assert len(calls) == 1, "second call must hit the cache"
-    p1, p2 = os.path.join(w1, "artifact.bin"), os.path.join(w2, "artifact.bin")
-    assert open(p1, "rb").read() == open(p2, "rb").read() == b"payload-v1"
-    # linked serve: same inode as the cached copy
-    cached = next(
-        os.path.join(root, e, "artifact.bin")
-        for e in os.listdir(root) if e.startswith("t_sf_")
-    )
-    assert os.stat(p1).st_ino == os.stat(cached).st_ino
-    # deleting a linked work copy never touches the cache
-    os.unlink(p1)
-    assert open(cached, "rb").read() == b"payload-v1"
-    # params change the fingerprint → rebuild
-    w3 = str(tmp_path / "w3"); os.makedirs(w3)
-    stage_files(d, w3, cache_prefix="t_sf", params=["v2"], build=build,
-                cache_root=root)
-    assert len(calls) == 2
-    # a failing builder degrades to a direct build (the fallback path)
-    w4 = str(tmp_path / "w4"); os.makedirs(w4)
-    state = {"n": 0}
-
-    def flaky(into):
-        state["n"] += 1
-        if state["n"] == 1:
-            raise RuntimeError("first build blows up")
-        build(into)
-
-    stage_files(d, w4, cache_prefix="t_sf2", params=["v1"], build=flaky,
-                cache_root=root)
-    assert os.path.exists(os.path.join(w4, "artifact.bin"))
-
-
 def test_compact_exact_index_invariance(spark, skewed_docs, tmp_path):
     """compact_exact_index (round 9, VERDICT r8 item 2): after two daily
     appends the digest index carries extra files per bucket; compaction
@@ -849,63 +680,6 @@ def test_compact_ivf_index_invariance(spark, tmp_path):
                        str(64 * 1024 * 1024))
         for t in ("cells", "centroids", "meta"):
             spark.sql(f"DROP TABLE IF EXISTS t_civf_{t}")
-
-
-def test_stage_fingerprint_robust_to_persist(spark, tmp_path):
-    """Round 14 regression: DataFrame.inputFiles() consults the plan
-    WITH cache substitution, so a persist-marked relation reports zero
-    input files — stage_files then silently fell back to a per-run
-    direct build, disabling the cross-run cache for any caller that
-    persisted its corpus for multi-consumer reuse (staged_ivf_index
-    measured 0.6 s → 7.3 s per run).  _corpus_input_stats must return
-    the same (files, stats) fingerprint either way, and a persisted
-    corpus must HIT the cache entry a non-persisted one created."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fossa_spark.queries._util import load
-    from fossa_spark.sources import _corpus_input_stats, stage_files
-    from tests.conftest import SF_DIR
-
-    plain = load(spark, SF_DIR, "embeddings").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    cached = (
-        load(spark, SF_DIR, "embeddings")
-        .persist()
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-    )
-    try:
-        fp_plain = _corpus_input_stats(plain)
-        fp_cached = _corpus_input_stats(cached)
-        assert fp_plain[0], "fingerprint must see the parquet input files"
-        assert fp_plain == fp_cached, (
-            "persist() must not change the staging fingerprint"
-        )
-
-        calls = []
-
-        def build(into):
-            calls.append(into)
-            os.makedirs(into, exist_ok=True)
-            with open(os.path.join(into, "a.bin"), "wb") as fh:
-                fh.write(b"x")
-
-        root = str(tmp_path / "cache")
-        w1, w2 = str(tmp_path / "w1"), str(tmp_path / "w2")
-        os.makedirs(w1)
-        os.makedirs(w2)
-        stage_files(plain, w1, cache_prefix="t_pfp", params=["v1"],
-                    build=build, cache_root=root)
-        stage_files(cached, w2, cache_prefix="t_pfp", params=["v1"],
-                    build=build, cache_root=root)
-        assert len(calls) == 1, (
-            "a persisted corpus must hit the cache entry the plain "
-            "corpus created, not fall back to a direct build"
-        )
-    finally:
-        cached.unpersist()
 
 
 def test_round_half_up_matches_spark_round(spark):

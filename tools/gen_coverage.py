@@ -84,18 +84,12 @@ def main() -> None:
     print("round's driver run hash-matched the oracle; rNN ran = the driver")
     print("executed it without error (the max a rows-only query can show);")
     print("local = pytest oracle-parity green, no driver window slot yet.")
-    print("Never-driver-verified oracle-backed queries sort AHEAD of every")
-    print("once-green cohort in the rotation (r11 verdict item 1), so all")
-    print("local rows land in the next driver window while fewer than ~30")
-    print("of them compete for its 50 slots.\n")
+    print()
     print("| Query | Check | Driver | Family (module) | Summary |")
     print("|---|---|---|---|---|")
     total = oracle_count = never = 0
     for modname in _MODULES:
-        try:
-            mod = import_module(modname)
-        except ModuleNotFoundError:
-            continue
+        mod = import_module(modname)
         family = modname.rsplit(".", 1)[-1]
         for name, fn in sorted(getattr(mod, "QUERIES", {}).items()):
             total += 1
