@@ -19,7 +19,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from fossa_spark.engine import CapacityExceeded, Engine, InvalidTaskSpec, Job
+from fossa_spark.engine import CapacityExceeded, Engine, InvalidTaskSpec, parse_job
 
 API_PREFIX = "/api/0.01"
 
@@ -87,22 +87,10 @@ def _make_handler(engine: Engine):
                 return
             length = int(self.headers.get("Content-Length", "0"))
             try:
-                doc = json.loads(self.rfile.read(length) or b"{}")
-            except json.JSONDecodeError:
-                self._send(400, {"error": "invalid JSON"})
+                job = parse_job(self.rfile.read(length))
+            except ValueError as e:
+                self._send(400, {"error": str(e)})
                 return
-            if "model_class" not in doc:
-                self._send(400, {"error": "model_class is required"})
-                return
-            job = Job(
-                model_class=doc["model_class"],
-                method=doc.get("method", "go"),
-                method_kwargs=doc.get("method_kwargs", {}),
-                model_construction_kwargs=doc.get("model_construction_kwargs", {}),
-                resolver_context=doc.get("resolver_context", {}),
-                partition_initialise_kwargs=doc.get("partition_initialise_kwargs", {}),
-                task_id=doc.get("task_id"),
-            )
             try:
                 task_id = engine.submit(job)
             except InvalidTaskSpec as e:
@@ -122,26 +110,6 @@ def _make_handler(engine: Engine):
     return Handler
 
 
-def _make_server(addr, handler, reuse_port: bool = False) -> ThreadingHTTPServer:
-    """A ThreadingHTTPServer, optionally joining an SO_REUSEPORT group so
-    several acceptor loops can share one port (gunicorn-workers shape
-    without leaving the driver process)."""
-    if not reuse_port:
-        return ThreadingHTTPServer(addr, handler)
-
-    import socket
-
-    if not hasattr(socket, "SO_REUSEPORT"):  # pragma: no cover - non-Linux
-        raise OSError("SO_REUSEPORT not supported on this platform")
-
-    class ReuseportServer(ThreadingHTTPServer):
-        def server_bind(self) -> None:
-            self.socket.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEPORT, 1)
-            super().server_bind()
-
-    return ReuseportServer(addr, handler)
-
-
 class StatusApi:
     """Serve the engine API on localhost; ``with StatusApi(engine) as api:``
     or ``api.start()`` / ``api.stop()``.
@@ -150,64 +118,26 @@ class StatusApi:
     fronts its API with gunicorn, workers=4 (reference lib/fossa/main.py:81)
     because each of its requests may fork task processes; here requests
     only read the registry or enqueue to the engine, so the registry must
-    stay in THIS process (the Spark driver) — a multi-PROCESS front-end
-    would need shared-state plumbing for zero win.  ``workers=N`` gives
-    the gunicorn-parity concurrency shape within that constraint: N
-    acceptor loops sharing one port via SO_REUSEPORT (the kernel
-    load-balances connections across them), each a ThreadingHTTPServer
-    spawning a thread per request.  Behind a real deployment, put any
-    WSGI front (the handler logic is framework-free) — the engine
-    contract does not change."""
+    stay in THIS process (the Spark driver). One ThreadingHTTPServer
+    spawning a thread per request gives that concurrency — more acceptor
+    loops in the same GIL-bound process would add nothing. Behind a real
+    deployment, put any WSGI front (the handler logic is framework-free) —
+    the engine contract does not change."""
 
-    def __init__(self, engine: Engine, port: int = 0, workers: int = 1):
-        import socket
-        import warnings
-
-        handler = _make_handler(engine)
-        # SO_REUSEPORT is Linux-specific (absent on Windows; macOS binds
-        # but does not kernel-load-balance) — degrade to a single acceptor
-        # rather than crash (round-3 advisor finding).
-        if workers > 1 and not hasattr(socket, "SO_REUSEPORT"):
-            warnings.warn(
-                "SO_REUSEPORT unavailable on this platform; "
-                "falling back to workers=1",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            workers = 1
-        first = _make_server(("127.0.0.1", port), handler, reuse_port=workers > 1)
-        self._servers = [first]
-        try:
-            for _ in range(workers - 1):
-                self._servers.append(
-                    _make_server(
-                        ("127.0.0.1", first.server_address[1]),
-                        handler,
-                        reuse_port=True,
-                    )
-                )
-        except OSError:
-            # partial construction must not leak bound listeners
-            for srv in self._servers:
-                srv.server_close()
-            raise
-        self._threads: list[threading.Thread] = []
+    def __init__(self, engine: Engine, port: int = 0):
+        self._server = ThreadingHTTPServer(("127.0.0.1", port), _make_handler(engine))
 
     @property
     def port(self) -> int:
-        return self._servers[0].server_address[1]
+        return self._server.server_address[1]
 
     def start(self) -> "StatusApi":
-        for srv in self._servers:
-            t = threading.Thread(target=srv.serve_forever, daemon=True)
-            t.start()
-            self._threads.append(t)
+        threading.Thread(target=self._server.serve_forever, daemon=True).start()
         return self
 
     def stop(self) -> None:
-        for srv in self._servers:
-            srv.shutdown()
-            srv.server_close()
+        self._server.shutdown()
+        self._server.server_close()
 
     def __enter__(self) -> "StatusApi":
         return self.start()

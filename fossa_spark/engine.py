@@ -19,6 +19,7 @@ Spark's scheduler doing the actual work the governor hand-rolled:
 
 from __future__ import annotations
 
+import json
 import threading
 import time
 import traceback
@@ -74,19 +75,39 @@ class CapacityExceeded(RuntimeError):
     pass
 
 
+def parse_job(spec: str | bytes) -> Job:
+    """A JSON job-spec document → ``Job``: the one parser behind the HTTP
+    intake and the job feed. Raises ``ValueError`` for undecodable JSON or
+    a document without ``model_class``."""
+    try:
+        doc = json.loads(spec or b"{}")
+    except json.JSONDecodeError:
+        raise ValueError("invalid JSON") from None
+    if not isinstance(doc, dict) or "model_class" not in doc:
+        raise ValueError("model_class is required")
+    return Job(
+        model_class=doc["model_class"],
+        method=doc.get("method", "go"),
+        method_kwargs=doc.get("method_kwargs", {}),
+        model_construction_kwargs=doc.get("model_construction_kwargs", {}),
+        resolver_context=doc.get("resolver_context", {}),
+        partition_initialise_kwargs=doc.get("partition_initialise_kwargs", {}),
+        task_id=doc.get("task_id"),
+    )
+
+
 class Engine:
     """Submit/track/cancel Model runs on a SparkSession."""
 
-    def __init__(self, spark: SparkSession, max_concurrent_tasks: int | None = None,
-                 cpu_task_ratio: float = 1.0):
-        """``max_concurrent_tasks`` defaults to cpu_count × cpu_task_ratio —
-        the reference's CPU-derived capacity (RuntimeKnowledge.cpu_task_ratio,
-        reference lib/fossa/app.py:81-83)."""
+    def __init__(self, spark: SparkSession, max_concurrent_tasks: int | None = None):
+        """``max_concurrent_tasks`` defaults to the CPU count — the
+        reference's CPU-derived capacity (RuntimeKnowledge, reference
+        lib/fossa/app.py:81-83)."""
         import os
 
         self.spark = spark
         if max_concurrent_tasks is None:
-            max_concurrent_tasks = max(1, int((os.cpu_count() or 4) * cpu_task_ratio))
+            max_concurrent_tasks = os.cpu_count() or 4
         self.max_concurrent_tasks = max_concurrent_tasks
         self._accepted: dict[str, type[Model]] = {}
         self._jobs: dict[str, JobResult] = {}
@@ -119,13 +140,18 @@ class Engine:
         if job.model_class not in self._accepted:
             raise InvalidTaskSpec(f"class not in accepted list: {job.model_class}")
         deadline = time.monotonic() + timeout
-        task_id = job.task_id or uuid.uuid4().hex[:8]
         while True:
-            # capacity check and RUNNING insert must be one atomic step —
-            # concurrent submits (ThreadingHTTPServer) would otherwise both
-            # pass the check before either registers
+            # id check, capacity check and RUNNING insert are one atomic
+            # step — concurrent submits (ThreadingHTTPServer, JobFeed) would
+            # otherwise both pass the checks before either registers. A
+            # known id is rejected at once, never waiting for capacity.
             with self._lock:
+                if job.task_id in self._jobs:
+                    raise InvalidTaskSpec(f"duplicate task_id: {job.task_id}")
                 if self.max_concurrent_tasks - self._running() > 0:
+                    task_id = job.task_id
+                    while not task_id or task_id in self._jobs:
+                        task_id = uuid.uuid4().hex[:8]  # a drawn id draws again on collision
                     self._jobs[task_id] = JobResult(task_id, JobStatus.RUNNING, time.time())
                     break
             if not block_if_full or time.monotonic() > deadline:

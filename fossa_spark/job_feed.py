@@ -14,35 +14,33 @@ correct here — the data plane never passes through this path.
 Delivery semantics — at-least-once, like the reference's acked queue
 (message_exchange.py:121-140 notes a message is "in limbo" between delivery
 and ack): a crash between submitting a batch's jobs and committing the
-checkpoint replays the batch. Redeliveries are absorbed by task_id — a spec
-whose task_id the Engine already knows is skipped — so supplying task_ids
-in specs upgrades the pipeline to effectively-once. Poison specs (bad JSON,
-missing model_class) are logged and dropped; allowlist rejections
-(InvalidTaskSpec) likewise — a bad spec must not wedge the feed. Capacity
-exhaustion, by contrast, FAILS the batch so the checkpoint does not commit
-and the batch retries: back-pressure propagates to the feed instead of
-dropping work (the reference's broker prefetch limit plays this role).
+checkpoint replays the batch. Redeliveries are absorbed by task_id — the
+Engine rejects a spec whose task_id it already knows, atomically with its
+admission — so supplying task_ids in specs upgrades the pipeline to
+effectively-once. Poison specs (bad JSON, missing model_class) are logged
+and dropped; allowlist rejections (InvalidTaskSpec) likewise — a bad spec
+must not wedge the feed. Capacity exhaustion, by contrast, FAILS the batch
+so the checkpoint does not commit and the batch retries: back-pressure
+propagates to the feed instead of dropping work (the reference's broker
+prefetch limit plays this role).
 """
 
 from __future__ import annotations
 
-import json
 import logging
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fossa_spark.engine import Engine, InvalidTaskSpec, Job, JobStatus
+from fossa_spark.engine import Engine, InvalidTaskSpec, parse_job
 
 logger = logging.getLogger("fossa_spark")
 
 
 class JobFeed:
     """Tail ``spec_dir`` for JSON-lines job specs and submit each to the
-    Engine. One spec per line; fields mirror the HTTP intake document
-    (api.py do_POST): model_class (required), method, method_kwargs,
-    model_construction_kwargs, resolver_context,
-    partition_initialise_kwargs, task_id."""
+    Engine. One spec per line, parsed by ``engine.parse_job`` exactly as
+    the HTTP intake parses its document."""
 
     def __init__(
         self,
@@ -57,44 +55,19 @@ class JobFeed:
         self.block_timeout = block_timeout
         self._query = None
 
-    # -- spec → Job (shared shape with the HTTP intake)
-    @staticmethod
-    def parse_spec(line: str) -> Job | None:
-        try:
-            doc = json.loads(line)
-        except json.JSONDecodeError:
-            logger.warning("job feed: dropping undecodable spec line: %.80s", line)
-            return None
-        if not isinstance(doc, dict) or "model_class" not in doc:
-            logger.warning("job feed: dropping spec without model_class: %.80s", line)
-            return None
-        return Job(
-            model_class=doc["model_class"],
-            method=doc.get("method", "go"),
-            method_kwargs=doc.get("method_kwargs", {}),
-            model_construction_kwargs=doc.get("model_construction_kwargs", {}),
-            resolver_context=doc.get("resolver_context", {}),
-            partition_initialise_kwargs=doc.get("partition_initialise_kwargs", {}),
-            task_id=doc.get("task_id"),
-        )
-
     def _submit_batch(self, batch: DataFrame, epoch_id: int) -> None:
         for row in batch.collect():  # control-plane only; specs are tiny
-            job = self.parse_spec(row.value)
-            if job is None:
-                continue
-            if (
-                job.task_id
-                and self.engine.task_summary(job.task_id)["status"]
-                != JobStatus.UNKNOWN.value
-            ):
-                # at-least-once redelivery absorbed by task_id
-                logger.info("job feed: skipping known task_id %s", job.task_id)
+            try:
+                job = parse_job(row.value)
+            except ValueError as e:
+                logger.warning("job feed: dropping spec (%s): %.80s", e, row.value)
                 continue
             try:
                 self.engine.submit(job, block_if_full=True,
                                    timeout=self.block_timeout)
             except InvalidTaskSpec as e:
+                # unregistered class, or a task_id the Engine already
+                # knows: at-least-once redelivery is absorbed here
                 logger.warning("job feed: rejected spec (%s)", e)
             # CapacityExceeded intentionally NOT caught: fail the batch →
             # checkpoint not committed → redelivery = back-pressure.

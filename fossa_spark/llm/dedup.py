@@ -539,18 +539,22 @@ def build_minhash_index(
     sh_rows.count()
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # pool threads inherit the caller's local properties (job group)
+    write = inheritable_thread_target(df.sparkSession)(write_bucketed)
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
             pool.submit(
-                write_bucketed, brows, f"{table_prefix}_bands", "bucket",
+                write, brows, f"{table_prefix}_bands", "bucket",
                 buckets=buckets, path=f"{path}/bands", sort_by="bucket",
             ),
             pool.submit(
-                write_bucketed, sh_rows, f"{table_prefix}_shingles", id_col,
+                write, sh_rows, f"{table_prefix}_shingles", id_col,
                 buckets=buckets, path=f"{path}/shingles", sort_by=id_col,
             ),
             pool.submit(
-                write_bucketed, sizes, f"{table_prefix}_sizes", id_col,
+                write, sizes, f"{table_prefix}_sizes", id_col,
                 buckets=buckets, path=f"{path}/sizes", sort_by=id_col,
             ),
         ]
@@ -778,14 +782,18 @@ def append_to_minhash_index(
     sh_rows.count()
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # pool threads inherit the caller's local properties (job group)
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(brows.write.insertInto, f"{table_prefix}_bands"),
+            pool.submit(inherit(brows.write.insertInto), f"{table_prefix}_bands"),
             pool.submit(
-                sh_rows.select(id_col, "_sh").write.insertInto,
+                inherit(sh_rows.select(id_col, "_sh").write.insertInto),
                 f"{table_prefix}_shingles",
             ),
-            pool.submit(sizes.write.insertInto, f"{table_prefix}_sizes"),
+            pool.submit(inherit(sizes.write.insertInto), f"{table_prefix}_sizes"),
         ]
         for f in futs:
             f.result()  # re-raise any write failure

@@ -11,15 +11,16 @@ Reference semantics re-expressed (SURVEY.md §2b):
 Spark-native execution: a Model's work is DataFrame transformations; `go()`
 triggers the actions. PartitionedModel fan-out runs through one of three
 strategies (mirroring the reference's pluggable AbstractProcessPool,
-reference lib/fossa/control/rabbit_mq/process_pool.py:8-17):
+reference lib/fossa/control/rabbit_mq/process_pool.py:8-17). They differ
+only in WHERE subtasks run; all build results with ``_call`` and, off the
+driver, ship the class with ``_ship`` and run it with ``_run_shipped``:
 
 - ``TaskParallelStrategy``  — arbitrary-Python subtasks distributed as one
-  Spark job: ``sc.parallelize(subtasks, n).map(run)`` (each executor core
-  runs subtasks; results gathered by collect). The direct analogue of the
-  reference's RabbitMQ fan-out, minus the broker.
-- ``GroupedDataStrategy``   — data-parallel subtasks keyed by a column:
-  ``groupBy(key).applyInPandas`` (the idiomatic path when the "subtask"
-  is really a data partition).
+  Spark job: ``sc.parallelize(subtasks, n).mapPartitions(run)`` (results
+  gathered by collect). The direct analogue of the reference's RabbitMQ
+  fan-out, minus the broker.
+- ``LocalProcessStrategy``  — driver-side OS-process pool, one future per
+  subtask, so a crashing subtask fails alone.
 - ``LocalThreadStrategy``   — driver-side thread pool for subtasks that
   are themselves Spark actions (concurrent jobs share the scheduler,
   optionally under FAIR pools).
@@ -27,14 +28,20 @@ reference lib/fossa/control/rabbit_mq/process_pool.py:8-17):
 
 from __future__ import annotations
 
+import functools
 import logging
+import pickle
+import sys
 import traceback
 from collections.abc import Callable, Iterable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor
+from concurrent.futures.process import BrokenProcessPool
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark import cloudpickle
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 logger = logging.getLogger("fossa_spark")
 
@@ -112,79 +119,78 @@ class Model:
         return self.build()
 
 
-def _run_subtask_remote(
-    payload: tuple[bytes, str, dict[str, Any], dict[str, Any]],
-) -> dict[str, Any]:
-    """Executor-side subtask runner for TaskParallelStrategy: reconstruct
-    the model (without a SparkSession — subtasks must be plain Python) and
-    invoke the named method."""
-    import pickle
-
-    cls_bytes, method, kwargs, init_kwargs = payload
-    cls = pickle.loads(cls_bytes)
-    model = cls(spark=None)
-    if hasattr(model, "partition_initialise"):
-        model.partition_initialise(**init_kwargs)
+def _call(model: "PartitionedModel", st: SubTask) -> dict[str, Any]:
+    """Run one subtask on ``model``: the one result shape every strategy
+    yields — ``value`` on success, ``error``/``traceback`` on failure."""
     try:
-        value = getattr(model, method)(**kwargs)
-        return {"method": method, "kwargs": kwargs, "ok": True, "value": value}
+        return {"method": st.method, "kwargs": st.kwargs, "ok": True,
+                "value": getattr(model, st.method)(**st.kwargs)}
     except Exception as e:  # noqa: BLE001 - subtask errors are data
-        return {
-            "method": method,
-            "kwargs": kwargs,
-            "ok": False,
-            "error": f"{type(e).__name__}: {e}",
-            "traceback": traceback.format_exc(),
-        }
+        return {"method": st.method, "kwargs": st.kwargs, "ok": False,
+                "error": f"{type(e).__name__}: {e}",
+                "traceback": traceback.format_exc()}
+
+
+def _ship(model: "PartitionedModel") -> tuple[bytes, dict[str, Any]]:
+    """The model CLASS pickled by value, with its partition init kwargs —
+    user model modules are not importable on executors or in child
+    processes (the reference shipped a class *name* and required
+    pre-registration on every node; we ship the code itself)."""
+    mod = sys.modules.get(type(model).__module__)
+    if mod is not None and mod.__name__ not in ("builtins", "__main__"):
+        try:
+            cloudpickle.register_pickle_by_value(mod)
+        except Exception:  # noqa: BLE001 - best effort; ref-pickle fallback
+            pass
+    init_kwargs = getattr(model, "partition_initialise_kwargs", {}) or {}
+    return cloudpickle.dumps(type(model)), init_kwargs
+
+
+def _run_shipped(cls_bytes: bytes, init_kwargs: dict[str, Any],
+                 subtasks: Iterable[SubTask]) -> list[dict[str, Any]]:
+    """Executor- or child-side runner: unpickle the class once, then run
+    each subtask on a fresh model (without a SparkSession — subtasks must
+    be plain Python). A raising ``partition_initialise`` fails the whole
+    call, not one subtask."""
+    cls = pickle.loads(cls_bytes)
+    results = []
+    for st in subtasks:
+        model = cls(spark=None)
+        if hasattr(model, "partition_initialise"):
+            model.partition_initialise(**init_kwargs)
+        results.append(_call(model, st))
+    return results
 
 
 class TaskParallelStrategy:
     """Fan subtasks out as one Spark job over a parallelized collection —
     the reference's broker fan-out (C6/C7) without a broker: Spark's
-    scheduler does admission, locality, and retries
-    (spark.task.maxFailures replaces the retry scoreboard,
-    reference lib/fossa/control/rabbit_mq/process_pool.py:27-28)."""
+    scheduler does admission and locality, and the class ships once per
+    partition rather than once per subtask. Failed subtasks come back as
+    results; ``PartitionedModel.go()`` retries them."""
 
     def run(self, model: "PartitionedModel", subtasks: list[SubTask],
             processes: int | None) -> Iterable[dict[str, Any]]:
-        import sys
-
-        from pyspark import cloudpickle
-
         spark = model.spark
         assert spark is not None, "TaskParallelStrategy needs a live SparkSession"
         n = min(processes or len(subtasks), max(len(subtasks), 1))
-        # Ship the model CLASS by value — user model modules are not
-        # importable on executors (the reference shipped a class *name* and
-        # required pre-registration on every node; we ship the code itself).
-        mod = sys.modules.get(type(model).__module__)
-        if mod is not None and mod.__name__ not in ("builtins", "__main__"):
-            try:
-                cloudpickle.register_pickle_by_value(mod)
-            except Exception:  # noqa: BLE001 - best effort; ref-pickle fallback
-                pass
-        cls_bytes = cloudpickle.dumps(type(model))
-        init_kwargs = getattr(model, "partition_initialise_kwargs", {}) or {}
-        payloads = [(cls_bytes, st.method, st.kwargs, init_kwargs) for st in subtasks]
-        rdd = spark.sparkContext.parallelize(payloads, max(n, 1))
-        yield from rdd.map(_run_subtask_remote).collect()
+        cls_bytes, init_kwargs = _ship(model)
+        rdd = spark.sparkContext.parallelize(subtasks, max(n, 1))
+        yield from rdd.mapPartitions(
+            functools.partial(_run_shipped, cls_bytes, init_kwargs)).collect()
 
 
 class LocalThreadStrategy:
     """Driver-side thread pool: right when each subtask itself launches
-    Spark actions (concurrent jobs multiplex onto the same scheduler)."""
+    Spark actions (concurrent jobs multiplex onto the same scheduler).
+    Each pool thread inherits the caller's Spark local properties, so the
+    subtasks' Spark jobs stay in the task's job group."""
 
     def run(self, model: "PartitionedModel", subtasks: list[SubTask],
             processes: int | None) -> Iterable[dict[str, Any]]:
-        def call(st: SubTask) -> dict[str, Any]:
-            try:
-                return {"method": st.method, "kwargs": st.kwargs, "ok": True,
-                        "value": getattr(model, st.method)(**st.kwargs)}
-            except Exception as e:  # noqa: BLE001
-                return {"method": st.method, "kwargs": st.kwargs, "ok": False,
-                        "error": f"{type(e).__name__}: {e}",
-                        "traceback": traceback.format_exc()}
-
+        call = functools.partial(_call, model)
+        if model.spark is not None:
+            call = inheritable_thread_target(model.spark)(call)
         workers = max(1, processes or min(len(subtasks), 32))
         with ThreadPoolExecutor(max_workers=workers) as ex:
             yield from ex.map(call, subtasks)
@@ -200,28 +206,12 @@ class LocalProcessStrategy:
     accepts (documented trade-off, VERDICT r02).
 
     Subtasks must be plain Python (no SparkSession in the child — same
-    contract as TaskParallelStrategy's executor side). The model CLASS is
-    shipped by value via cloudpickle, so user-defined model modules need
-    not be importable in the child."""
+    contract as TaskParallelStrategy's executor side); the class ships by
+    value as there, one future per subtask."""
 
     def run(self, model: "PartitionedModel", subtasks: list[SubTask],
             processes: int | None) -> Iterable[dict[str, Any]]:
-        import sys
-        from concurrent.futures import ProcessPoolExecutor
-        from concurrent.futures.process import BrokenProcessPool
-
-        from pyspark import cloudpickle
-
-        mod = sys.modules.get(type(model).__module__)
-        if mod is not None and mod.__name__ not in ("builtins", "__main__"):
-            try:
-                cloudpickle.register_pickle_by_value(mod)
-            except Exception:  # noqa: BLE001 - best effort; ref-pickle fallback
-                pass
-        cls_bytes = cloudpickle.dumps(type(model))
-        init_kwargs = getattr(model, "partition_initialise_kwargs", {}) or {}
-        payloads = [(cls_bytes, st.method, st.kwargs, init_kwargs)
-                    for st in subtasks]
+        cls_bytes, init_kwargs = _ship(model)
         workers = max(1, min(processes or len(subtasks) or 1, 32))
         results: list[dict[str, Any]] = []
         # A worker crash (BrokenProcessPool) kills every in-flight future;
@@ -229,10 +219,11 @@ class LocalProcessStrategy:
         # results so the caller's per-subtask retry budget decides — one
         # bad actor must not discard finished work or the whole batch.
         with ProcessPoolExecutor(max_workers=workers) as ex:
-            futs = [ex.submit(_run_subtask_remote, p) for p in payloads]
+            futs = [ex.submit(_run_shipped, cls_bytes, init_kwargs, [st])
+                    for st in subtasks]
             for st, fut in zip(subtasks, futs):
                 try:
-                    results.append(fut.result())
+                    results.extend(fut.result())
                 except BrokenProcessPool:
                     results.append({
                         "method": st.method,
@@ -316,6 +307,3 @@ class PartitionedModel(Model):
                                             res.get("error", "unknown"))
             pending = retry
         return results
-
-
-FanOutStrategy = Callable[..., Iterable[dict[str, Any]]]

@@ -106,12 +106,17 @@ def test_html_views(api):
     assert f"task {tid}" in page
 
 
-def test_partition_initialise_kwargs_passed(spark):
+@pytest.mark.parametrize(
+    "strategy", ["LocalThreadStrategy", "TaskParallelStrategy", "LocalProcessStrategy"])
+def test_partition_initialise_kwargs_passed(spark, strategy):
+    """partition_initialise_kwargs reach the model that runs each subtask:
+    the driver's own model (threads), or the fresh one each executor or
+    child process builds."""
+    from fossa_spark import model as M
     from fossa_spark.engine import Engine, Job
-    from fossa_spark.model import PartitionedModel
 
-    class InitAware(PartitionedModel):
-        from fossa_spark.model import LocalThreadStrategy as strategy_cls
+    class InitAware(M.PartitionedModel):
+        strategy_cls = getattr(M, strategy)
 
         def partition_initialise(self, tag: str = "none") -> None:
             self.tag = tag
@@ -128,22 +133,4 @@ def test_partition_initialise_kwargs_passed(spark):
                          partition_initialise_kwargs={"tag": "hello-init"}))
     res = eng.wait(tid)
     assert res.value == ["hello-init"]
-    eng.shutdown(wait=False)
-
-
-def test_multi_worker_serving(spark):
-    """workers=N (gunicorn-parity): N acceptor loops share one port via
-    SO_REUSEPORT; every request — wherever the kernel routes it — serves
-    the same registry, and shutdown closes every listener."""
-    eng = Engine(spark, max_concurrent_tasks=1)
-    eng.register_model(HelloApiModel)
-    with StatusApi(eng, workers=3) as a:
-        assert len(a._servers) == 3
-        port = a.port
-        assert all(s.server_address[1] == port for s in a._servers)
-        for _ in range(12):
-            code, doc = _get(port, f"{API_PREFIX}/node_info")
-            assert code == 200 and "max_concurrent_tasks" in doc
-    # all listeners closed
-    assert all(srv.socket.fileno() == -1 for srv in a._servers)
     eng.shutdown(wait=False)

@@ -16,11 +16,13 @@ from pyspark.sql import functions as F
 from fossa_spark.connect import AccessMode, Connect, EngineUrl, MultiConnect, connector_resolver
 from fossa_spark.engine import CapacityExceeded, Engine, InvalidTaskSpec, Job, JobStatus
 from fossa_spark.model import (
+    LocalProcessStrategy,
     LocalThreadStrategy,
     Model,
     PartitionedModel,
     PartitionOption,
     SubTaskFailed,
+    TaskParallelStrategy,
 )
 
 
@@ -127,6 +129,39 @@ def test_previous_tasks_ordered_by_completion(engine):
     assert prev.index(fast) < prev.index(slow), prev
 
 
+def test_concurrent_duplicate_task_ids_run_once(spark):
+    """Two concurrent submits with one task_id: exactly one runs, the other
+    is rejected, and the running count stays exact. A known id is
+    rejected at once, also after its job has finished."""
+    import threading
+
+    eng = Engine(spark, max_concurrent_tasks=4)
+    eng.register_model(SlowModel)
+    barrier = threading.Barrier(2)
+    outcomes = []
+
+    def submit():
+        barrier.wait()
+        try:
+            outcomes.append(eng.submit(Job(model_class="SlowModel", task_id="dup")))
+        except InvalidTaskSpec as e:
+            outcomes.append(e)
+
+    threads = [threading.Thread(target=submit) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert sorted(type(o).__name__ for o in outcomes) == ["InvalidTaskSpec", "str"]
+    assert eng.node_summary()["running_tasks"] == ["dup"]
+    assert eng.capacity == 3
+    assert eng.wait("dup").status is JobStatus.COMPLETE
+    with pytest.raises(InvalidTaskSpec, match="duplicate task_id"):
+        eng.submit(Job(model_class="SlowModel", task_id="dup"))
+    assert eng.capacity == 4
+    eng.shutdown(wait=False)
+
+
 def test_allowlist_rejects_unknown_and_duplicates(engine):
     engine.register_model(HelloModel)
     with pytest.raises(InvalidTaskSpec):
@@ -152,7 +187,14 @@ def test_partitioned_fanout_spark(spark):
     assert len(m.completed) == 8
 
 
-def test_retry_second_time_lucky(spark):
+@pytest.mark.parametrize(
+    "strategy", [LocalThreadStrategy, TaskParallelStrategy, LocalProcessStrategy],
+    ids=lambda c: c.__name__)
+def test_retry_second_time_lucky(spark, monkeypatch, strategy):
+    """Each strategy reports a failed first attempt as a result, and the
+    driver's retry round re-runs it — on the driver, on an executor or in
+    a child process (the marker files are the only shared state)."""
+    monkeypatch.setattr(SecondTimeLucky, "strategy_cls", strategy)
     with tempfile.TemporaryDirectory() as d:
         SecondTimeLucky.marker_dir = d
         m = SecondTimeLucky(spark=spark)
@@ -339,6 +381,30 @@ def test_engine_runs_spark_fanout_model(spark):
     assert res.status is JobStatus.COMPLETE
     expected = [sum(i * i for i in range(b * 1000, (b + 1) * 1000)) for b in range(6)]
     assert sorted(res.value) == sorted(expected)
+    eng.shutdown(wait=False)
+
+
+class SparkActionFanout(PartitionedModel):
+    """Four thread-pool subtasks, each running a Spark action."""
+
+    strategy_cls = LocalThreadStrategy
+
+    def partition_slice(self, n):
+        return [("count", {"i": i}) for i in range(4)]
+
+    def count(self, i: int) -> int:
+        return self.spark.range(10 + i).count()
+
+
+def test_thread_fanout_jobs_keep_task_job_group(spark):
+    """Spark jobs started by LocalThreadStrategy subtasks carry the task's
+    job group, so Engine.cancel reaches them."""
+    eng = Engine(spark, max_concurrent_tasks=2)
+    eng.register_model(SparkActionFanout)
+    tid = eng.submit(Job(model_class="SparkActionFanout"))
+    res = eng.wait(tid)
+    assert res.status is JobStatus.COMPLETE and sorted(res.value) == [10, 11, 12, 13]
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(tid)) >= 4
     eng.shutdown(wait=False)
 
 
