@@ -16,7 +16,9 @@ from the reference's untyped strings); multi-dataset templates map to
 
 from __future__ import annotations
 
+import os
 import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from enum import Enum
 from urllib.parse import urlparse
@@ -115,6 +117,56 @@ class ConnectorResolver:
 connector_resolver = ConnectorResolver()
 
 
+# session confs that change how a parquet footer maps to a schema
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_MEMO_MAX = 256  # paths; the oldest entry is dropped first
+_schema_memo: OrderedDict[str, tuple[tuple, T.StructType]] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str, **options: str) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)`` that infers a regular
+    file's schema once per (inode, size, mtime, _SCHEMA_CONFS values). A
+    repeat read passes the StructType back, which starts no Spark job and
+    gives the same plan: Spark applies asNullable to a supplied schema as to
+    an inferred one. Directories (a file rewritten inside one leaves its
+    mtime alone), globs and ``mergeSchema`` reads infer every time."""
+    reader = spark.read.options(**options)
+    full = os.path.abspath(path)
+    if (any(c in path for c in "*?[{")
+            or any(k.lower() == "mergeschema" for k in options)
+            or not os.path.isfile(full)):
+        return reader.parquet(path)
+    st = os.stat(full)
+    key = (st.st_ino, st.st_size, st.st_mtime_ns,
+           tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    with _schema_lock:
+        hit = _schema_memo.get(full)
+    if hit is not None and hit[0] == key:
+        return reader.schema(hit[1]).parquet(path)
+    df = reader.parquet(path)
+    with _schema_lock:
+        _schema_memo[full] = (key, df.schema)
+        _schema_memo.move_to_end(full)
+        while len(_schema_memo) > _SCHEMA_MEMO_MAX:
+            _schema_memo.popitem(last=False)
+    return df
+
+
+def _forget_schemas(path: str) -> None:
+    """Drop the remembered schemas at and under ``path``."""
+    full = os.path.abspath(path)
+    with _schema_lock:
+        for p in [p for p in _schema_memo
+                  if p == full or p.startswith(full + os.sep)]:
+            del _schema_memo[p]
+
+
 def _schema_from_field_names(field_names: list[str] | None) -> T.StructType | None:
     if field_names is None:
         return None
@@ -144,7 +196,6 @@ class Connect:
     def datasource_exists(self) -> bool:
         """Existence probe (reference examples/example_etl.py:75)."""
         import glob
-        import os
 
         p = self.resolved().path
         return os.path.exists(p) or bool(glob.glob(p))
@@ -155,11 +206,11 @@ class Connect:
             return self._read_sqlite(spark, url)
         if url.scheme == "versioned":
             return self._read_versioned(spark, url)
-        reader = spark.read
         schema = self.schema or _schema_from_field_names(self.field_names)
-        if schema is not None:
-            reader = reader.schema(schema)
         fmt, opts = self._format_and_options(url)
+        if schema is None and fmt == "parquet":
+            return read_parquet(spark, url.path, **opts)
+        reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.options(**opts).format(fmt).load(url.path)
 
     def write(self, df: DataFrame, mode: str = "overwrite",
@@ -178,6 +229,7 @@ class Connect:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.options(**opts).format(fmt).save(url.path)
+        _forget_schemas(url.path)
 
     def _format_and_options(self, url: EngineUrl) -> tuple[str, dict[str, str]]:
         opts = dict(self.options)
@@ -224,8 +276,6 @@ class Connect:
 
     def _write_versioned(self, df: DataFrame, url: EngineUrl,
                          mode: str, partition_by: list[str] | None) -> None:
-        import os
-
         from pyspark.sql import functions as F
 
         from fossa_spark import versioned as V

@@ -69,6 +69,20 @@ def cosine_batch(a: Column, b: Column) -> Column:
     return _cos(a, b)
 
 
+def _cosine_pairs(queries: DataFrame, candidates: DataFrame, id_q: str,
+                  id_c: str, vec_q: str, vec_c: str) -> DataFrame:
+    """Every (query, candidate) pair with its unrounded cosine ``score``,
+    the same double as ``cosine()``; each side's norm is computed once."""
+    q = queries.withColumn("_nq", norm(F.col(vec_q)))
+    c = candidates.withColumn("_nc", norm(F.col(vec_c)))
+    return (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col(id_q) != F.col(id_c))
+        .withColumn("score", dot(F.col(vec_q), F.col(vec_c))
+                    / (F.col("_nq") * F.col("_nc")))
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -82,10 +96,8 @@ def brute_force_topk(
     """Exact cosine top-k per query. The query side is broadcast —
     candidates never shuffle. Scores rounded so cross-engine fold-order
     double noise can't flip ranks; ties broken on candidate id."""
-    j = candidates.crossJoin(F.broadcast(queries)).filter(F.col(id_q) != F.col(id_c))
-    scored = j.withColumn(
-        "score", F.round(cosine(F.col(vec_q), F.col(vec_c)), round_to)
-    )
+    pairs = _cosine_pairs(queries, candidates, id_q, id_c, vec_q, vec_c)
+    scored = pairs.withColumn("score", F.round("score", round_to))
     w = W.partitionBy(id_q).orderBy(F.col("score").desc(), F.col(id_c).asc())
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fossa_spark.connect import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -32,13 +34,16 @@ TABLES = (
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet → columnar scan with pushdown.
+    """Read one fixture table. Parquet → columnar scan with pushdown; the
+    file's schema is inferred once (``connect.read_parquet``).
 
     Pins the session timezone to UTC (runtime-settable): the DuckDB oracle
     is timezone-naive/UTC, and unix_timestamp()/collection semantics follow
-    the session TZ — the grading driver's session may not set it."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    the session TZ — a caller's vanilla session may not set it. The conf
+    is session-wide, so it is written only when it differs."""
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fossa_spark.connect import read_parquet
 from fossa_spark.queries._util import cents
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,8 +53,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         except FileExistsError:
             pass
     # readStream requires an explicit schema; it must match the file's
-    # actual layout, so take it from a (footer-only) batch read.
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # actual layout, so take it from the file's footer (nanosAsLong, set
+    # above, is part of the remembered schema's key).
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(batch_schema)
         .option("maxFilesPerTrigger", 1)

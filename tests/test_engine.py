@@ -6,14 +6,27 @@ connector layer.
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
 import time
+from collections import OrderedDict
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from fossa_spark.connect import AccessMode, Connect, EngineUrl, MultiConnect, connector_resolver
+from fossa_spark import connect
+from fossa_spark.connect import (
+    AccessMode,
+    Connect,
+    EngineUrl,
+    MultiConnect,
+    connector_resolver,
+    read_parquet,
+)
 from fossa_spark.engine import CapacityExceeded, Engine, InvalidTaskSpec, Job, JobStatus
 from fossa_spark.model import (
     LocalProcessStrategy,
@@ -24,6 +37,8 @@ from fossa_spark.model import (
     SubTaskFailed,
     TaskParallelStrategy,
 )
+from fossa_spark.queries import all_queries
+from tests.conftest import SF_DIR
 
 
 class HelloModel(Model):
@@ -311,6 +326,98 @@ def test_connect_read_only_guard(spark):
     assert src.read(spark).count() == 5
     with pytest.raises(PermissionError):
         src.write(src.read(spark))
+
+
+ETL_QUERIES = ("q_agg_basic", "q_agg_rollup", "q_join_inner",
+               "q_join_broadcast", "q_distinct", "q_table_diff")
+
+
+def test_parquet_reads_start_no_spark_job_once_schema_known(spark):
+    """After a file's first read its schema is remembered: building the
+    etl_jobs query plans again and a second Connect.read run no Spark job."""
+    queries = all_queries()
+    src = Connect(engine_url=f"parquet://{SF_DIR}/region.parquet")
+    src.read(spark)
+    for name in ETL_QUERIES:
+        queries[name](spark, SF_DIR)
+    sc = spark.sparkContext
+    group = f"schema-memo-{time.time_ns()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        for name in ETL_QUERIES:
+            queries[name](spark, SF_DIR)
+        assert src.read(spark).columns == ["r_regionkey", "r_name"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_parquet_schema_follows_rewrite(spark, tmp_path):
+    """A file rewritten at the same path reads back with its new schema,
+    whether pyarrow rewrote it in place or Connect.write overwrote the
+    directory it sits in."""
+    f = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), f)
+    assert read_parquet(spark, f).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), f)
+    assert read_parquet(spark, f).columns == ["b", "c"]
+    assert [(r.b, r.c) for r in read_parquet(spark, f).collect()] == [("x", 1.5)]
+
+    d = str(tmp_path / "tbl")
+    sink = Connect(engine_url=f"parquet://{d}", access=AccessMode.READWRITE)
+    sink.write(spark.range(2).coalesce(1))
+    part = glob.glob(f"{d}/*.parquet")[0]
+    assert read_parquet(spark, part).columns == ["id"]
+    assert part in connect._schema_memo
+    sink.write(spark.range(2).coalesce(1).selectExpr("id AS k", "'v' AS v"))
+    assert not [p for p in connect._schema_memo if p.startswith(d + os.sep)]
+    part = glob.glob(f"{d}/*.parquet")[0]
+    assert read_parquet(spark, part).columns == ["k", "v"]
+    assert sink.read(spark).columns == ["k", "v"]
+
+
+def test_parquet_schema_keyed_on_nanos_conf(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column reads as bigint under nanosAsLong; with the
+    conf off the read raises as it always did, not with the bigint schema
+    remembered under the other setting."""
+    f = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), f,
+                   version="2.6")
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        assert read_parquet(spark, f).dtypes == [("ts", "bigint")]
+        spark.conf.set(conf, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, f)
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_parquet_schema_not_remembered_for_dirs_or_merge(spark, tmp_path):
+    d = tmp_path / "dir"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1]}), d / "part-0.parquet")
+    assert read_parquet(spark, str(d)).columns == ["a"]
+    assert read_parquet(spark, str(d / "part-0.parquet"),
+                        mergeSchema="true").columns == ["a"]
+    assert str(d) not in connect._schema_memo
+    assert str(d / "part-0.parquet") not in connect._schema_memo
+
+
+def test_parquet_schema_memo_bounded(spark, tmp_path, monkeypatch):
+    """The memo holds at most _SCHEMA_MEMO_MAX paths; the oldest goes first."""
+    cap = connect._SCHEMA_MEMO_MAX
+    memo = OrderedDict((f"/absent/{i}.parquet", ((), None)) for i in range(cap))
+    monkeypatch.setattr(connect, "_schema_memo", memo)
+    files = [str(tmp_path / f"f{i}.parquet") for i in range(2)]
+    for f in files:
+        pq.write_table(pa.table({"a": [1]}), f)
+        read_parquet(spark, f)
+    assert len(memo) == cap
+    assert "/absent/0.parquet" not in memo and "/absent/1.parquet" not in memo
+    assert "/absent/2.parquet" in memo and all(f in memo for f in files)
 
 
 def test_multi_connect_templated_outputs(spark):

@@ -247,6 +247,18 @@ def test_brute_force_topk_contract(vecs):
                        for _, _, cid in row if rid != rid)  # self excluded
 
 
+def test_brute_force_scores_equal_cosine(vecs):
+    """Each side's norm is computed once, before the cross join; every
+    unrounded pair score is the same double cosine() computes per pair."""
+    q = vecs.filter("vec_id < 8").selectExpr("vec_id q_id", "embedding q_vec")
+    c = vecs.selectExpr("vec_id c_id", "embedding c_vec")
+    pairs = S._cosine_pairs(q, c, "q_id", "c_id", "q_vec", "c_vec").select(
+        "score", S.cosine(F.col("q_vec"), F.col("c_vec")).alias("ref"))
+    rows = pairs.collect()
+    assert len(rows) == 8 * (c.count() - 1)
+    assert all(r.score == r.ref for r in rows)
+
+
 def test_srp_lsh_recall(vecs):
     q = vecs.filter("vec_id < 10").selectExpr("vec_id q_id", "embedding q_vec")
     c = vecs.selectExpr("vec_id c_id", "embedding c_vec")
