@@ -26,24 +26,19 @@ API_PREFIX = "/api/0.01"
 
 def _make_handler(engine: Engine):
     class Handler(BaseHTTPRequestHandler):
-        def _send(self, code: int, doc: dict) -> None:
-            body = json.dumps(doc).encode()
+        def _send(self, code: int, body: dict | str) -> None:
+            """A dict goes out as JSON, a str as an HTML page."""
+            is_doc = isinstance(body, dict)
+            data = (json.dumps(body) if is_doc else body).encode()
             self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
+            self.send_header("Content-Type", "application/json" if is_doc
+                             else "text/html; charset=utf-8")
+            self.send_header("Content-Length", str(len(data)))
             self.end_headers()
-            self.wfile.write(body)
+            self.wfile.write(data)
 
         def log_message(self, *args) -> None:  # quiet
             return
-
-        def _send_html(self, code: int, html: str) -> None:
-            body = html.encode()
-            self.send_response(code)
-            self.send_header("Content-Type", "text/html; charset=utf-8")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
 
         def do_GET(self) -> None:
             if self.path == f"{API_PREFIX}/node_info":
@@ -60,7 +55,7 @@ def _make_handler(engine: Engine):
                     f"{html.escape(t)}</a></li>"
                     for t in s["running_tasks"] + s["previous_tasks"]
                 )
-                self._send_html(
+                self._send(
                     200,
                     "<html><body><h1>fossa_spark node</h1>"
                     f"<p>capacity: {s['available_processing_capacity']}"
@@ -71,7 +66,7 @@ def _make_handler(engine: Engine):
                 doc = engine.task_summary(task_id)
                 code = 200 if doc["status"] != "unknown" else 404
                 # escape everything URL- or job-derived: reflected XSS otherwise
-                self._send_html(
+                self._send(
                     code,
                     f"<html><body><h1>task {html.escape(task_id)}</h1>"
                     f"<p>status: {html.escape(doc['status'])}</p>"

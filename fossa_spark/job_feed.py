@@ -17,10 +17,13 @@ and ack): a crash between submitting a batch's jobs and committing the
 checkpoint replays the batch. Redeliveries are absorbed by task_id — the
 Engine rejects a spec whose task_id it already knows, atomically with its
 admission — so supplying task_ids in specs upgrades the pipeline to
-effectively-once. Poison specs (bad JSON, missing model_class) are logged
+effectively-once. The Engine remembers only its last ``KEEP_FINISHED``
+finished jobs, so a redelivery is absorbed while fewer than
+``KEEP_FINISHED`` jobs have finished since the first delivery; after that
+the id is unknown again and the job runs a second time. Poison specs (bad JSON, missing model_class) are logged
 and dropped; allowlist rejections (InvalidTaskSpec) likewise — a bad spec
-must not wedge the feed. Capacity exhaustion, by contrast, FAILS the batch
-so the checkpoint does not commit and the batch retries: back-pressure
+must not wedge the feed. Capacity exhaustion (a shut-down Engine included), by contrast, FAILS
+the batch so the checkpoint does not commit and the batch retries: back-pressure
 propagates to the feed instead of dropping work (the reference's broker
 prefetch limit plays this role).
 """

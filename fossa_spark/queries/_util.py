@@ -33,16 +33,21 @@ TABLES = (
 )
 
 
+def pin_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set a session conf only when its current value differs: the conf is
+    session-wide, shared by every concurrent Engine job on the session."""
+    if spark.conf.get(key, None) != value:
+        spark.conf.set(key, value)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet → columnar scan with pushdown; the
     file's schema is inferred once (``connect.read_parquet``).
 
     Pins the session timezone to UTC (runtime-settable): the DuckDB oracle
     is timezone-naive/UTC, and unix_timestamp()/collection semantics follow
-    the session TZ — a caller's vanilla session may not set it. The conf
-    is session-wide, so it is written only when it differs."""
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    the session TZ — a caller's vanilla session may not set it."""
+    pin_conf(spark, "spark.sql.session.timeZone", "UTC")
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
@@ -57,7 +62,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # The driver harness builds its own SparkSession, so this conf cannot be
     # assumed from fossa_spark.session — set it here (runtime-settable).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     e = load(spark, sf_dir, "events")
     dt = dict(e.dtypes)["ts"]
     if dt in ("bigint", "long"):

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fossa_spark.connect import read_parquet
-from fossa_spark.queries._util import cents
+from fossa_spark.queries._util import cents, pin_conf
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (one file per trigger →
@@ -27,8 +27,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanosAsLong; TIMESTAMP(MICROS) → TIMESTAMP_NTZ), so probe the batch
     footer for the real schema and normalize to TimestampType exactly like
     the batch loader (queries/_util.load_events)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_conf(spark, "spark.sql.session.timeZone", "UTC")
     # The file source needs a DIRECTORY; expose the single fixture file
     # through a scratch dir of symlinks (testdata itself is read-only).
     # Path must be STABLE per sf_dir: streaming checkpoints record the

@@ -177,6 +177,98 @@ def test_concurrent_duplicate_task_ids_run_once(spark):
     eng.shutdown(wait=False)
 
 
+def test_submit_after_shutdown_is_refused(spark):
+    """A submit after shutdown() is a capacity refusal (HTTP 503, a failed
+    JobFeed batch), and it registers nothing that could hold a slot."""
+    eng = Engine(spark, max_concurrent_tasks=2)
+    eng.register_model(HelloModel)
+    eng.shutdown()
+    with pytest.raises(CapacityExceeded, match="shut down"):
+        eng.submit(Job(model_class="HelloModel", task_id="late"))
+    assert eng.task_summary("late")["status"] == "unknown"
+    assert eng.capacity == 2
+
+
+def test_wait_on_unknown_id_returns_unknown(engine):
+    res = engine.wait("nope")
+    assert res.status is JobStatus.UNKNOWN
+    assert (res.task_id, res.started) == ("nope", None)
+
+
+def test_wait_racing_submit_returns_finished_record(spark):
+    """A wait() that starts while submit is still handing the job to the
+    pool blocks until the job has finished."""
+    import threading
+
+    eng = Engine(spark, max_concurrent_tasks=2)
+    eng.register_model(HelloModel)
+    hand_off = eng._pool.submit
+
+    def slow_hand_off(*args, **kwargs):
+        time.sleep(0.3)
+        return hand_off(*args, **kwargs)
+
+    eng._pool.submit = slow_hand_off
+    submitter = threading.Thread(
+        target=eng.submit, args=(Job(model_class="HelloModel", task_id="race"),))
+    submitter.start()
+    while eng.task_summary("race")["status"] == "unknown":
+        time.sleep(0.005)
+    res = eng.wait("race")
+    submitter.join()
+    assert res.status is JobStatus.COMPLETE
+    assert res.value == "hello_world"
+    eng.shutdown()
+
+
+def test_registry_keeps_last_finished_records(spark, monkeypatch):
+    """The registry holds KEEP_FINISHED finished records: older ones read
+    as unknown, previous_tasks is the last 20 in completion order, and a
+    redelivered id is rejected while held and runs again once evicted."""
+    from fossa_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "KEEP_FINISHED", 25, raising=False)
+    eng = Engine(spark, max_concurrent_tasks=1)
+    eng.register_model(HelloModel)
+    ids = [f"j{i:02d}" for i in range(30)]
+    for tid in ids:
+        eng.wait(eng.submit(Job(model_class="HelloModel", task_id=tid)))
+    held = [t for t in ids if eng.task_summary(t)["status"] != "unknown"]
+    assert held == ids[5:]
+    assert eng.node_summary()["previous_tasks"] == ids[-20:]
+    with pytest.raises(InvalidTaskSpec, match="duplicate task_id"):
+        eng.submit(Job(model_class="HelloModel", task_id=ids[5]))
+    again = eng.submit(Job(model_class="HelloModel", task_id=ids[0]))
+    assert eng.wait(again).status is JobStatus.COMPLETE
+    assert eng.task_summary(ids[5])["status"] == "unknown"
+    assert eng.capacity == 1
+    eng.shutdown()
+
+
+class SleepingSparkModel(Model):
+    def build(self):
+        self.spark.range(2, numPartitions=2).foreach(lambda _: time.sleep(10))
+
+
+def test_cancel_fails_running_job_and_frees_its_slot(spark):
+    eng = Engine(spark, max_concurrent_tasks=2)
+    eng.register_model(SleepingSparkModel)
+    tid = eng.submit(Job(model_class="SleepingSparkModel"))
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(tid):
+        assert time.monotonic() < deadline, "the model's Spark job never started"
+        time.sleep(0.05)
+    with pytest.raises(TimeoutError):
+        eng.wait(tid, timeout=0.05)
+    assert eng.capacity == 1
+    eng.cancel(tid)
+    res = eng.wait(tid, timeout=5)
+    assert res.status is JobStatus.FAILED
+    assert eng.capacity == 2
+    eng.shutdown()
+
+
 def test_allowlist_rejects_unknown_and_duplicates(engine):
     engine.register_model(HelloModel)
     with pytest.raises(InvalidTaskSpec):

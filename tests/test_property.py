@@ -6,11 +6,16 @@ filled (no property tests anywhere in the reference repo).
 from __future__ import annotations
 
 import math
+import threading
+import time
+from collections import Counter
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fossa_spark.connect import ConnectorResolver, EngineUrl
+from fossa_spark.engine import Engine, InvalidTaskSpec, Job, JobStatus
+from fossa_spark.model import Model
 
 # -- the cents contract: round-trip of 2-decimal values is exact
 
@@ -505,3 +510,76 @@ def test_bpe_greedy_pass_leaves_no_occurrence(syms, pair):
     assert all(
         not (x == pair[0] and y == pair[1]) for x, y in zip(out, out[1:])
     ), (syms, pair, out)
+
+
+# -- Engine invariants under concurrent clients
+
+
+class CountingModel(Model):
+    """Sleeps a few ms; records the task id it ran under and the peak
+    number of model bodies running at once."""
+
+    lock = threading.Lock()
+    runs: list[str] = []
+    live = peak = 0
+
+    def build(self):
+        k = type(self)
+        with k.lock:
+            k.live += 1
+            k.peak = max(k.peak, k.live)
+            k.runs.append(self.spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        time.sleep(0.003)
+        with k.lock:
+            k.live -= 1
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    capacity=st.integers(min_value=1, max_value=3),
+    clients=st.lists(
+        st.lists(st.one_of(st.sampled_from("abcde"), st.none()), min_size=1, max_size=6),
+        min_size=2, max_size=4,
+    ),
+)
+def test_engine_invariants_under_concurrent_clients(spark, capacity, clients):
+    """Client threads submit ids drawn from a small alphabet (so duplicates
+    race) plus generated ones: each explicit id is accepted and runs
+    exactly once, every rejection is a duplicate of an accepted id, every
+    accepted job reaches a terminal status through wait(), no more jobs
+    run at once than the capacity, and the engine ends idle."""
+    CountingModel.runs.clear()
+    CountingModel.peak = 0
+    eng = Engine(spark, max_concurrent_tasks=capacity)
+    eng.register_model(CountingModel)
+    outcomes: list[tuple[str | None, object]] = []
+
+    def client(ids):
+        for tid in ids:
+            try:
+                got = eng.submit(Job(model_class="CountingModel", task_id=tid),
+                                 block_if_full=True, timeout=60.0)
+            except InvalidTaskSpec as e:
+                got = e
+            outcomes.append((tid, got))
+
+    threads = [threading.Thread(target=client, args=(ids,)) for ids in clients]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    try:
+        accepted = [got for _, got in outcomes if isinstance(got, str)]
+        assert len(set(accepted)) == len(accepted)
+        explicit = {tid for ids in clients for tid in ids if tid is not None}
+        assert explicit <= set(accepted)
+        for tid, got in outcomes:
+            if not isinstance(got, str):
+                assert "duplicate task_id" in str(got) and tid in accepted, (tid, got)
+        assert all(eng.wait(t, timeout=60).status is JobStatus.COMPLETE for t in accepted)
+        assert Counter(CountingModel.runs) == Counter(accepted)
+        assert CountingModel.peak <= capacity
+        assert eng.capacity == capacity
+        assert eng.node_summary()["running_tasks"] == []
+    finally:
+        eng.shutdown()

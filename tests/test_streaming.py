@@ -33,6 +33,28 @@ def _canon(df):
     return sorted(tuple(map(str, r)) for r in df.collect())
 
 
+def test_events_stream_leaves_pinned_confs_alone(spark, monkeypatch):
+    """events_stream writes its two session-wide confs only when they
+    differ: concurrent Engine jobs share the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    pinned = {"spark.sql.session.timeZone": "UTC",
+              "spark.sql.legacy.parquet.nanosAsLong": "true"}
+    for key, value in pinned.items():
+        spark.conf.set(key, value)
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    FS.events_stream(spark, SF_DIR)
+    FS.events_stream(spark, SF_DIR)
+    assert not set(pinned) & set(writes), writes
+
+
 def test_tumbling_batch_parity(spark):
     stream = FS.tumbling_agg(FS.events_stream(spark, SF_DIR), watermark="100 days")
     _run_to_completion(stream, "t_tumble", output_mode="complete")
